@@ -45,16 +45,16 @@ BTRIM / INITCAP / REGEXP_SUBSTR / REGEXP_COUNT / REGEXP_INSTR /
 DATE_PART / EXTRACT / DATEADD / ADD_MONTHS / LAST_DAY need no rewrite —
 Spark 4 parses them natively with matching semantics (probe-verified).
 
-Bounded-subset assumptions (documented, not silent):
-- String literals escape quotes by DOUBLING (''), the SQL standard both
-  dialects share. Backslash-escaped quotes (\\') are NOT supported by
-  the literal-parity scanners — scripts using them must be normalized.
-- Comments are stripped before rewriting (strip_sql_comments), so
-  apostrophes in comments cannot corrupt the literal scan.
-- DATEDIFF/TRUNC/RATIO_TO_REPORT splice their argument text into the
-  expansion more than once; arguments are assumed DETERMINISTIC (a
-  rand() argument would be evaluated independently per splice). Same
-  class of contract as SQL macro expansion.
+Lexical rules (literals, quoted identifiers, comments, $$ bodies; the
+'' escape; backslash-escaped quotes unsupported) are stated once, in
+the functions/lexer.py docstring; every rewrite below scans through that
+lexer, so text inside literals, quoted identifiers and comments is never
+rewritten.
+
+DATEDIFF/TRUNC/RATIO_TO_REPORT splice their argument text into the
+expansion more than once; arguments are assumed DETERMINISTIC (a rand()
+argument would be evaluated independently per splice). Same class of
+contract as SQL macro expansion.
 """
 
 from __future__ import annotations
@@ -64,6 +64,17 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from sql_redshift_etl_spark.functions.dialect import translate_datetime_format
+from sql_redshift_etl_spark.functions.lexer import (
+    close_paren,
+    mask,
+    protect,
+    restore,
+    split_top,
+    strip_comments,
+    sub_outside_quotes,
+    tokens,
+    top_matches,
+)
 
 _DATEDIFF_EXPRS = {
     "year": "(year({b}) - year({a}))",
@@ -92,115 +103,47 @@ _DATEDIFF_UNIT_ALIASES = {
 
 
 def strip_sql_comments(script: str) -> str:
-    """Remove ``--`` line and ``/* */`` block comments, quote-aware
-    (markers inside string literals are content; a block comment leaves
-    one space so it stays a token separator). Every rewrite below
-    assumes comment-free input — an apostrophe in a comment would
-    otherwise flip the literal-parity scan."""
-    out: list[str] = []
-    i, n = 0, len(script)
-    in_quote = False
-    while i < n:
-        ch = script[i]
-        if in_quote:
-            out.append(ch)
-            if ch == "'":
-                in_quote = False
-            i += 1
-        elif ch == "'":
-            out.append(ch)
-            in_quote = True
-            i += 1
-        elif script.startswith("--", i):
-            j = script.find("\n", i)
-            i = n if j == -1 else j  # keep the newline as whitespace
-        elif script.startswith("/*", i):
-            j = script.find("*/", i + 2)
-            if j == -1:
-                raise ValueError("unterminated /* comment in script")
-            out.append(" ")  # a comment is a token separator: `a/**/b` ≠ `ab`
-            i = j + 2
+    """Remove ``--`` and ``/* */`` comments (lexer.strip_comments)."""
+    return strip_comments(script)
+
+
+def _args(body: str, n: int | None = None) -> list[str]:
+    """Top-level comma-separated arguments, stripped; exactly ``n`` of
+    them when ``n`` is given."""
+    args = [a.strip() for a in split_top(body, ",")]
+    if n is not None and len(args) != n:
+        raise ValueError(f"expected {n} arguments: {body!r}")
+    return args
+
+
+def _rewrite_calls(sql: str, pattern: str, render) -> str:
+    """Rewrite calls matched by ``pattern`` (ending at the call's ``(``),
+    last match first, so a call nested in another's arguments is
+    rewritten before its host. ``render(body, m)`` returns the
+    replacement for the whole call (``body`` is the raw argument text),
+    or None to leave that call alone."""
+    while True:
+        for m in reversed(list(re.finditer(pattern, mask(sql)))):
+            end = close_paren(sql, m.end() - 1)
+            repl = render(sql[m.end() : end - 1], m)
+            if repl is not None:
+                sql = f"{sql[: m.start()]}{repl}{sql[end:]}"
+                break
         else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
-
-
-def _mask_literals(sql: str) -> tuple[str, list[str]]:
-    """Replace every single-quoted literal with a placeholder so plain
-    re.sub rewrites cannot mutate DATA ('run GETDATE() nightly' must
-    stay intact). Placeholders use \\x00, which cannot occur in SQL."""
-    lits: list[str] = []
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":  # '' escape
-                        j += 2
-                        continue
-                    break
-                j += 1
-            lits.append(sql[i : j + 1])
-            out.append(f"\x00{len(lits) - 1}\x00")
-            i = j + 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out), lits
-
-
-def _unmask_literals(sql: str, lits: list[str]) -> str:
-    return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], sql)
-
-
-def _in_literal(sql: str, pos: int) -> bool:
-    """True when ``pos`` falls inside a single-quoted SQL literal. An odd
-    count of preceding quotes means "inside"; Redshift's '' escape adds a
-    pair, so plain counting stays correct."""
-    return sql.count("'", 0, pos) % 2 == 1
-
-
-def _split_two_args(body: str) -> tuple[str, str]:
-    """Split 'a, b' at the top-level comma (paren- and quote-aware)."""
-    depth = 0
-    in_quote = False
-    for i, ch in enumerate(body):
-        if ch == "'":
-            in_quote = not in_quote
-        elif in_quote:
-            continue
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            return body[:i].strip(), body[i + 1 :].strip()
-    raise ValueError(f"expected two arguments: {body!r}")
+            return sql
 
 
 def _rewrite_datediff(sql: str) -> str:
-    pat = re.compile(r"\bDATEDIFF\s*\(\s*(\w+)\s*,", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            # 'contains DATEDIFF(' inside a string literal — not a call.
-            search_from = m.end()
-            continue
-        unit = m.group(1).lower()
+    pat = re.compile(r"\bDATEDIFF\s*(\()\s*(\w+)\s*,", re.IGNORECASE)
+    while m := pat.search(mask(sql)):
+        unit = m.group(2).lower()
         unit = _DATEDIFF_UNIT_ALIASES.get(unit, unit)
         if unit not in _DATEDIFF_EXPRS:
-            raise ValueError(f"unsupported DATEDIFF unit: {m.group(1)}")
-        i = _scan_balanced(sql, m.end())
-        a, b = _split_two_args(sql[m.end() : i - 1])
+            raise ValueError(f"unsupported DATEDIFF unit: {m.group(2)}")
+        i = close_paren(sql, m.start(1))
+        a, b = _args(sql[m.end() : i - 1], 2)
         sql = sql[: m.start()] + _DATEDIFF_EXPRS[unit].format(a=a, b=b) + sql[i:]
-        search_from = 0
+    return sql
 
 
 def _fmt_literal(rs_fmt: str) -> str:
@@ -222,15 +165,9 @@ def _rewrite_to_char(sql: str) -> str:
     silently wrong values, not an error). Non-literal formats raise."""
     pat = re.compile(r"\bTO_CHAR\s*\(", re.IGNORECASE)
     search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        end = _scan_balanced(sql, m.end())
-        expr, fmt = _split_two_args(sql[m.end() : end - 1])
+    while m := pat.search(mask(sql), search_from):
+        end = close_paren(sql, m.end() - 1)
+        expr, fmt = _args(sql[m.end() : end - 1], 2)
         fm = re.fullmatch(r"'([^']*)'", fmt)
         if not fm:
             raise ValueError(f"TO_CHAR format must be a string literal: {fmt!r}")
@@ -246,26 +183,7 @@ def _rewrite_to_char(sql: str) -> str:
         # resume inside the replacement: nested TO_CHAR in expr still
         # rewrites; the translated outer format must not re-translate
         search_from = m.start() + len("upper(" if rendered.startswith("upper(") else "date_format(")
-
-
-def _split_args(body: str) -> list[str]:
-    """Split an argument list on top-level commas (paren/quote-aware)."""
-    args: list[str] = []
-    depth, in_quote, start = 0, False, 0
-    for i, ch in enumerate(body):
-        if ch == "'":
-            in_quote = not in_quote
-        elif in_quote:
-            continue
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            args.append(body[start:i].strip())
-            start = i + 1
-    args.append(body[start:].strip())
-    return args
+    return sql
 
 
 def _rewrite_json_extract(sql: str) -> str:
@@ -275,15 +193,9 @@ def _rewrite_json_extract(sql: str) -> str:
     static JSONPath)."""
     pat = re.compile(r"\bJSON_EXTRACT_PATH_TEXT\s*\(", re.IGNORECASE)
     search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        end = _scan_balanced(sql, m.end())
-        args = _split_args(sql[m.end() : end - 1])
+    while m := pat.search(mask(sql), search_from):
+        end = close_paren(sql, m.end() - 1)
+        args = _args(sql[m.end() : end - 1])
         if len(args) < 2:
             raise ValueError("JSON_EXTRACT_PATH_TEXT needs a column and ≥1 path element")
         elems = []
@@ -297,6 +209,7 @@ def _rewrite_json_extract(sql: str) -> str:
         path = ".".join(elems)
         sql = f"{sql[: m.start()]}get_json_object({args[0]}, '$.{path}'){sql[end:]}"
         search_from = m.start() + len("get_json_object(")
+    return sql
 
 
 def _rewrite_listagg(sql: str) -> str:
@@ -323,20 +236,14 @@ def _rewrite_listagg(sql: str) -> str:
     wg_pat = re.compile(r"\s*WITHIN\s+GROUP\s*\(", re.IGNORECASE)
     over_pat = re.compile(r"\s*OVER\s*\(", re.IGNORECASE)
     search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        args_end = _scan_balanced(sql, m.end())
+    while m := pat.search(mask(sql), search_from):
+        args_end = close_paren(sql, m.end() - 1)
         wg = wg_pat.match(sql, args_end)
         if not wg:
             # plain LISTAGG (no WITHIN GROUP): Spark 4 parses it natively
             search_from = args_end
             continue
-        args = _split_args(sql[m.end() : args_end - 1])
+        args = _args(sql[m.end() : args_end - 1])
         if len(args) != 2 or not re.fullmatch(r"'[^']*'", args[1]):
             raise ValueError(
                 f"LISTAGG WITHIN GROUP needs (expr, 'literal-sep'): {args!r}"
@@ -345,7 +252,7 @@ def _rewrite_listagg(sql: str) -> str:
         distinct = False
         if dm := re.match(r"(?is)^DISTINCT\s+(.+)$", col):
             distinct, col = True, dm.group(1).strip()
-        wg_end = _scan_balanced(sql, wg.end())
+        wg_end = close_paren(sql, wg.end() - 1)
         inner = sql[wg.end() : wg_end - 1]
         om = re.fullmatch(r"(?is)\s*ORDER\s+BY\s+(.+?)(\s+ASC|\s+DESC)?\s*", inner)
         if not om:
@@ -355,7 +262,7 @@ def _rewrite_listagg(sql: str) -> str:
         end_idx = wg_end
         over_sfx = ""
         if ov := over_pat.match(sql, wg_end):
-            end_idx = _scan_balanced(sql, ov.end())
+            end_idx = close_paren(sql, ov.end() - 1)
             win = sql[ov.end() : end_idx - 1].strip()
             if re.search(r"\bORDER\s+BY\b", win, re.IGNORECASE):
                 raise ValueError(
@@ -383,30 +290,7 @@ def _rewrite_listagg(sql: str) -> str:
             sorted_arr = f"reverse({sorted_arr})"
         sql = f"{sql[: m.start()]}array_join({sorted_arr}, '{sep}'){sql[end_idx:]}"
         search_from = 0
-
-
-def _depth0_matches(sql: str, pattern: re.Pattern) -> list[re.Match]:
-    """Matches of ``pattern`` at paren depth 0, outside string literals."""
-    out = []
-    depth, in_quote = 0, False
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0:
-                m = pattern.match(sql, i)
-                if m:
-                    out.append(m)
-                    i = m.end()
-                    continue
-        i += 1
-    return out
+    return sql
 
 
 _QUALIFY_KW = re.compile(r"\bQUALIFY\b", re.IGNORECASE)
@@ -437,22 +321,22 @@ def _rewrite_qualify(sql: str) -> str:
     Bounded subset: one QUALIFY per depth-0 SELECT; DISTINCT + QUALIFY is
     rejected (appending the predicate column would change DISTINCT rows).
     """
-    quals = _depth0_matches(sql, _QUALIFY_KW)
+    quals = top_matches(sql, _QUALIFY_KW)
     if not quals:
         return sql
     m = quals[-1]
     pred_start = m.end()
-    tails = [t for t in _depth0_matches(sql, _TAIL_KW) if t.start() > pred_start]
+    tails = [t for t in top_matches(sql, _TAIL_KW) if t.start() > pred_start]
     pred_end = tails[0].start() if tails else len(sql)
     pred = sql[pred_start:pred_end].strip().rstrip(";")
     tail = sql[pred_end:].strip()
     tail = f" {tail}" if tail else ""
 
-    selects = [s for s in _depth0_matches(sql, _SELECT_KW) if s.start() < m.start()]
+    selects = [s for s in top_matches(sql, _SELECT_KW) if s.start() < m.start()]
     if not selects:
         raise ValueError("QUALIFY with no owning SELECT")
     sel = selects[-1]
-    froms = [f for f in _depth0_matches(sql, _FROM_KW) if sel.end() < f.start() < m.start()]
+    froms = [f for f in top_matches(sql, _FROM_KW) if sel.end() < f.start() < m.start()]
     if not froms:
         raise ValueError("QUALIFY rewrite needs a FROM clause")
     frm = froms[0]
@@ -470,23 +354,6 @@ def _rewrite_qualify(sql: str) -> str:
     return _rewrite_qualify(rewritten)
 
 
-def _scan_balanced(sql: str, i: int) -> int:
-    """Given ``i`` just past an opening paren, return the index just past
-    its matching close paren (quote-aware)."""
-    depth, in_quote = 1, False
-    while depth:
-        ch = sql[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        i += 1
-    return i
-
-
 def _rewrite_ratio_to_report(sql: str) -> str:
     """RATIO_TO_REPORT(x) OVER (w) → (CAST(x AS DOUBLE) / SUM(x) OVER (w)).
 
@@ -494,24 +361,17 @@ def _rewrite_ratio_to_report(sql: str) -> str:
     keeps the division double-typed even for decimal/int args, matching
     Redshift's double return type."""
     pat = re.compile(r"\bRATIO_TO_REPORT\s*\(", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        arg_end = _scan_balanced(sql, m.end())
+    while m := pat.search(mask(sql)):
+        arg_end = close_paren(sql, m.end() - 1)
         expr = sql[m.end() : arg_end - 1].strip()
         over = re.compile(r"\s*OVER\s*\(", re.IGNORECASE).match(sql, arg_end)
         if not over:
             raise ValueError("RATIO_TO_REPORT requires an OVER clause")
-        win_end = _scan_balanced(sql, over.end())
+        win_end = close_paren(sql, over.end() - 1)
         win = sql[over.end() : win_end - 1].strip()
         repl = f"(CAST({expr} AS DOUBLE) / SUM({expr}) OVER ({win}))"
         sql = sql[: m.start()] + repl + sql[win_end:]
-        search_from = 0
+    return sql
 
 
 def _rewrite_approx_count(sql: str) -> str:
@@ -520,21 +380,13 @@ def _rewrite_approx_count(sql: str) -> str:
     Redshift's HLL spelling; Spark's parser has no APPROXIMATE keyword.
     Argument extracted with the quote-aware balanced scan so nested
     parens/literals survive."""
-    pat = re.compile(r"\bAPPROXIMATE\s+COUNT\s*\(\s*DISTINCT\b", re.IGNORECASE)
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        open_paren = sql.index("(", m.start())
-        arg_end = _scan_balanced(sql, open_paren + 1)
-        body = sql[open_paren + 1 : arg_end - 1].strip()
+    pat = re.compile(r"\bAPPROXIMATE\s+COUNT\s*(\()\s*DISTINCT\b", re.IGNORECASE)
+    while m := pat.search(mask(sql)):
+        arg_end = close_paren(sql, m.start(1))
+        body = sql[m.end(1) : arg_end - 1].strip()
         expr = re.sub(r"^DISTINCT\s+", "", body, flags=re.IGNORECASE)
         sql = sql[: m.start()] + f"approx_count_distinct({expr})" + sql[arg_end:]
-        search_from = 0
+    return sql
 
 
 _APPROX_PCT_ACCURACY = 1_000_000
@@ -557,17 +409,9 @@ def _rewrite_approx_percentile(sql: str) -> str:
     Redshift and Spark (and DuckDB's quantile_disc), so NULL placement
     cannot affect the result — stripping is exact, not lenient."""
     pat = re.compile(r"(?i)\bAPPROXIMATE\s+PERCENTILE_DISC\s*\(")
-    search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        open_paren = sql.index("(", m.start())
-        p_end = _scan_balanced(sql, open_paren + 1)
-        p_lit = sql[open_paren + 1 : p_end - 1].strip()
+    while m := pat.search(mask(sql)):
+        p_end = close_paren(sql, m.end() - 1)
+        p_lit = sql[m.end() : p_end - 1].strip()
         if not re.fullmatch(r"[0-9]*\.?[0-9]+", p_lit):
             raise ValueError(
                 "APPROXIMATE PERCENTILE_DISC: the percentile must be a "
@@ -582,7 +426,7 @@ def _rewrite_approx_percentile(sql: str) -> str:
                 "(ORDER BY <expr>)"
             )
         wg_open = sql.index("(", p_end + wm.start())
-        wg_end = _scan_balanced(sql, wg_open + 1)
+        wg_end = close_paren(sql, wg_open)
         inner = sql[wg_open + 1 : wg_end - 1].strip()
         expr = re.sub(r"(?is)^ORDER\s+BY\s+", "", inner).strip()
         # NULLS FIRST|LAST is a no-op for a NULL-ignoring aggregate —
@@ -592,7 +436,7 @@ def _rewrite_approx_percentile(sql: str) -> str:
         # multi-key check must be paren/quote-aware (ADVICE r10): a
         # function-call comma inside the one expression — e.g.
         # ORDER BY COALESCE(x, 0) — is NOT a second sort key.
-        if re.search(r"(?i)\bDESC\b\s*$", expr) or len(_split_args(expr)) > 1:
+        if re.search(r"(?i)\bDESC\b\s*$", expr) or len(_args(expr)) > 1:
             raise ValueError(
                 "APPROXIMATE PERCENTILE_DISC: a single ASC ORDER BY "
                 f"expression only (got {expr[:40]!r})"
@@ -603,7 +447,7 @@ def _rewrite_approx_percentile(sql: str) -> str:
             + f"approx_percentile({expr}, {p_lit}, {_APPROX_PCT_ACCURACY})"
             + sql[wg_end:]
         )
-        search_from = 0
+    return sql
 
 
 _TOP_KW = re.compile(r"\bSELECT\s+TOP\s+(\d+)\b", re.IGNORECASE)
@@ -616,17 +460,17 @@ def _rewrite_top(sql: str) -> str:
     need its LIMIT placed at that subquery's end, which a text rewrite
     cannot do reliably — raise instead of corrupting (same policy as the
     quoted-literal scan notes in ADVICE r1)."""
-    depth0 = _depth0_matches(sql, _TOP_KW)
-    nested = [m for m in _TOP_KW.finditer(sql) if not _in_literal(sql, m.start())]
+    depth0 = top_matches(sql, _TOP_KW)
+    nested = _TOP_KW.findall(mask(sql))
     if len(nested) > len(depth0):
         raise ValueError("SELECT TOP inside a subquery is not supported; use LIMIT")
     if not depth0:
         return sql
     # only a DEPTH-0 LIMIT conflicts with moving TOP to the tail; a
     # LIMIT inside a subquery (or a string literal) is unrelated
-    if len(depth0) > 1 or _depth0_matches(sql, re.compile(r"\bLIMIT\b", re.IGNORECASE)):
+    if len(depth0) > 1 or top_matches(sql, re.compile(r"\bLIMIT\b", re.IGNORECASE)):
         raise ValueError("multiple TOP clauses / TOP mixed with LIMIT not supported")
-    if _depth0_matches(sql, re.compile(r"\b(UNION|INTERSECT|MINUS)\b|\bEXCEPT\s+(ALL\b|DISTINCT\b|SELECT\b)", re.IGNORECASE)):
+    if top_matches(sql, re.compile(r"\b(UNION|INTERSECT|MINUS)\b|\bEXCEPT\s+(ALL\b|DISTINCT\b|SELECT\b)", re.IGNORECASE)):
         # the appended LIMIT would bound the whole set expression, not
         # the TOP's own branch — refuse rather than silently re-scope
         raise ValueError("SELECT TOP with set operators is not supported; use LIMIT")
@@ -640,18 +484,14 @@ _CONVERT_KW = re.compile(r"\bCONVERT\s*\(", re.IGNORECASE)
 
 
 def _rewrite_convert(sql: str) -> str:
-    """Redshift ``CONVERT(type, expr)`` → ``CAST(expr AS type)``.
+    """Redshift ``CONVERT(type, expr)`` → ``CAST(expr AS type)``;
+    innermost-first, so nested CONVERTs compose."""
 
-    Balanced-paren + quote-aware scan; innermost-first via re-scan, so
-    nested CONVERTs compose."""
-    while True:
-        hits = [m for m in _CONVERT_KW.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]  # last hit = innermost-or-later; re-loop handles the rest
-        end = _scan_balanced(sql, m.end())
-        typ, expr = _split_two_args(sql[m.end() : end - 1])
-        sql = f"{sql[: m.start()]}CAST({expr} AS {typ}){sql[end:]}"
+    def render(body: str, _m) -> str:
+        typ, expr = _args(body, 2)
+        return f"CAST({expr} AS {typ})"
+
+    return _rewrite_calls(sql, _CONVERT_KW, render)
 
 
 def _rewrite_to_datetime(sql: str) -> str:
@@ -664,20 +504,14 @@ def _rewrite_to_datetime(sql: str) -> str:
     occurrences inside string literals are left alone."""
     pat = re.compile(r"\b(TO_DATE|TO_TIMESTAMP)\s*\(", re.IGNORECASE)
     search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            return sql
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        end = _scan_balanced(sql, m.end())
-        try:
-            expr, fmt = _split_two_args(sql[m.end() : end - 1])
-        except ValueError:
+    while m := pat.search(mask(sql), search_from):
+        end = close_paren(sql, m.end() - 1)
+        args = _args(sql[m.end() : end - 1])
+        if len(args) == 1:
             # single-arg TO_DATE(x): Spark parses it natively
             search_from = end
             continue
+        expr, fmt = _args(sql[m.end() : end - 1], 2)
         fm = re.fullmatch(r"'([^']*)'", fmt)
         if not fm:
             raise ValueError(f"{m.group(1)} format must be a string literal: {fmt!r}")
@@ -690,6 +524,7 @@ def _rewrite_to_datetime(sql: str) -> str:
         # re-match — cannot be re-translated (re-translating an already
         # Spark-dialect format would corrupt it)
         search_from = m.start() + len(fn) + 1
+    return sql
 
 
 def _rewrite_string_fns(sql: str) -> str:
@@ -698,16 +533,13 @@ def _rewrite_string_fns(sql: str) -> str:
     semantics identical)."""
 
     for kw, swap in (("CHARINDEX", True), ("STRPOS", False)):
-        pat = re.compile(rf"\b{kw}\s*\(", re.IGNORECASE)
-        while True:
-            hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-            if not hits:
-                break
-            m = hits[-1]
-            end = _scan_balanced(sql, m.end())
-            first, second = _split_two_args(sql[m.end() : end - 1])
+
+        def render(body: str, _m, swap=swap) -> str:
+            first, second = _args(body, 2)
             hay, needle = (second, first) if swap else (first, second)
-            sql = f"{sql[: m.start()]}instr({hay}, {needle}){sql[end:]}"
+            return f"instr({hay}, {needle})"
+
+        sql = _rewrite_calls(sql, rf"(?i)\b{kw}\s*\(", render)
     return sql
 
 
@@ -724,23 +556,15 @@ def _rewrite_trunc(sql: str) -> str:
     single-arg TRUNC(x) is NOT supported — spell TRUNC(x, 0)."""
     pat = re.compile(r"\bTRUNC\s*\(", re.IGNORECASE)
     search_from = 0
-    while True:
-        hits = [
-            m
-            for m in pat.finditer(sql, search_from)
-            if not _in_literal(sql, m.start())
-        ]
-        if not hits:
-            return sql
-        m = hits[0]
-        end = _scan_balanced(sql, m.end())
+    while m := pat.search(mask(sql), search_from):
+        end = close_paren(sql, m.end() - 1)
         body = sql[m.end() : end - 1]
-        try:
-            x, n = _split_two_args(body)
-        except ValueError:
+        args = _args(body)
+        if len(args) == 1:
             sql = f"{sql[: m.start()]}CAST({body.strip()} AS DATE){sql[end:]}"
             search_from = 0
             continue
+        x, n = _args(body, 2)
         if re.fullmatch(r"'[^']*'", n):
             search_from = end  # TRUNC(date, 'fmt'): native Spark date trunc
             continue
@@ -752,17 +576,15 @@ def _rewrite_trunc(sql: str) -> str:
         repl = f"(CASE WHEN ({x}) >= 0 THEN FLOOR({x}, {n}) ELSE CEIL({x}, {n}) END)"
         sql = f"{sql[: m.start()]}{repl}{sql[end:]}"
         search_from = 0
+    return sql
 
 
 def _rewrite_math_aliases(sql: str) -> str:
     """Redshift double-precision math aliases → Spark natives:
-    DEXP→exp, DLOG10→log10, DLOG1→ln. Literal-masked: the plain re.sub
-    must never rewrite DATA inside a string literal."""
-    masked, lits = _mask_literals(sql)
-    masked = re.sub(r"\bDEXP\s*\(", "exp(", masked, flags=re.IGNORECASE)
-    masked = re.sub(r"\bDLOG10\s*\(", "log10(", masked, flags=re.IGNORECASE)
-    masked = re.sub(r"\bDLOG1\s*\(", "ln(", masked, flags=re.IGNORECASE)
-    return _unmask_literals(masked, lits)
+    DEXP→exp, DLOG10→log10, DLOG1→ln."""
+    sql = sub_outside_quotes(r"\bDEXP\s*\(", "exp(", sql, flags=re.IGNORECASE)
+    sql = sub_outside_quotes(r"\bDLOG10\s*\(", "log10(", sql, flags=re.IGNORECASE)
+    return sub_outside_quotes(r"\bDLOG1\s*\(", "ln(", sql, flags=re.IGNORECASE)
 
 
 def _similar_to_regex(pat: str) -> str:
@@ -802,11 +624,10 @@ def _rewrite_similar_to(sql: str) -> str:
     the pattern must be a string literal (a dynamic pattern cannot be
     translated at rewrite time) and an explicit ESCAPE clause raises —
     only the default backslash escape is supported."""
-    masked, lits = _mask_literals(sql)
+    out, lits = protect(sql)
     pat = re.compile(r"\b(NOT\s+)?SIMILAR\s+TO\s*(\x00(\d+)\x00)?", re.IGNORECASE)
-    out = masked
     while m := pat.search(out):
-        if m.group(2) is None:
+        if m.group(2) is None or not lits[int(m.group(3))].startswith("'"):
             raise ValueError(
                 "SIMILAR TO pattern must be a string literal "
                 f"(near {out[m.start():m.start()+40]!r})"
@@ -821,14 +642,12 @@ def _rewrite_similar_to(sql: str) -> str:
         lits.append("'" + rx.replace("'", "''") + "'")
         neg = "NOT " if m.group(1) else ""
         out = f"{out[: m.start()]}{neg}RLIKE \x00{len(lits) - 1}\x00{out[m.end():]}"
-    return _unmask_literals(out, lits)
+    return restore(out, lits)
 
 
 def _rewrite_date_part_year(sql: str) -> str:
     """Redshift ``DATE_PART_YEAR(date)`` → ``year(date)``."""
-    masked, lits = _mask_literals(sql)
-    masked = re.sub(r"\bDATE_PART_YEAR\s*\(", "year(", masked, flags=re.IGNORECASE)
-    return _unmask_literals(masked, lits)
+    return sub_outside_quotes(r"\bDATE_PART_YEAR\s*\(", "year(", sql, flags=re.IGNORECASE)
 
 
 def _rewrite_extract_epoch(sql: str) -> str:
@@ -836,63 +655,45 @@ def _rewrite_extract_epoch(sql: str) -> str:
     ``unix_timestamp(x)`` (r5). Spark's EXTRACT has no EPOCH field
     (INVALID_EXTRACT_FIELD, probe-verified); Redshift returns integer
     epoch seconds, exactly unix_timestamp's contract."""
-    pat = re.compile(r"\bEXTRACT\s*\(\s*EPOCH\s+FROM\b", re.IGNORECASE)
+    pat = re.compile(r"\bEXTRACT\s*(\()\s*EPOCH\s+FROM\b", re.IGNORECASE)
     search_from = 0
-    while True:
-        m = pat.search(sql, search_from)
-        if not m:
-            break
-        if _in_literal(sql, m.start()):
-            search_from = m.end()
-            continue
-        open_paren = sql.index("(", m.start())
-        end = _scan_balanced(sql, open_paren + 1)
+    while m := pat.search(mask(sql), search_from):
+        end = close_paren(sql, m.start(1))
         expr = sql[m.end() : end - 1].strip()
         sql = f"{sql[: m.start()]}unix_timestamp({expr}){sql[end:]}"
         search_from = m.start() + len("unix_timestamp(")
-    pat2 = re.compile(r"\bDATE_PART\s*\(\s*'?epoch'?\s*,", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat2.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[0]
-        open_paren = sql.index("(", m.start())
-        end = _scan_balanced(sql, open_paren + 1)
+    # on the raw text: the 'epoch' spelling is itself a literal
+    # (a hit counts where it starts outside quotes: mask keeps that char)
+    pat2 = re.compile(r"\bDATE_PART\s*(\()\s*(?:epoch|'epoch')\s*,", re.IGNORECASE)
+    while m := next(
+        (h for h in pat2.finditer(sql) if mask(sql)[h.start()] == sql[h.start()]), None
+    ):
+        end = close_paren(sql, m.start(1))
         expr = sql[m.end() : end - 1].strip()
         sql = f"{sql[: m.start()]}unix_timestamp({expr}){sql[end:]}"
+    return sql
 
 
 def _operand_start(sql: str, i: int) -> int:
-    """Backward scan from just past an operand's END (index i, exclusive)
-    to its start: a parenthesized/function-call group, a quoted literal,
-    or a (qualified) identifier chain. Used by the postfix AT TIME ZONE
+    """Start of the operand that ends just before index ``i``: a
+    parenthesized or function-call group, a (typed) quoted literal, or a
+    (qualified) identifier chain. Used by the postfix AT TIME ZONE
     rewrite, which must wrap the PRECEDING expression."""
-    j = i
-    while j > 0 and sql[j - 1].isspace():
-        j -= 1
-    if j == 0:
+    before = [t for t in tokens(sql) if t[2] <= i and t[0] not in ("space", "comment")]
+    if not before:
         raise ValueError("AT TIME ZONE with no preceding expression")
-    if sql[j - 1] == ")":
+    kind, k, j = before[-1]
+    if kind == "close":
         depth = 0
-        k = j
-        while k > 0:
-            k -= 1
-            if sql[k] == ")":
-                depth += 1
-            elif sql[k] == "(":
-                depth -= 1
-                if depth == 0:
-                    break
+        for kind, k, _ in reversed(before):
+            depth += (kind == "close") - (kind == "open")
+            if depth == 0:
+                break
         # include a function name directly before the group
         while k > 0 and (sql[k - 1].isalnum() or sql[k - 1] in "_."):
             k -= 1
         return k
-    if sql[j - 1] == "'":
-        k = j - 2
-        while k >= 0 and sql[k] != "'":
-            k -= 1
-        if k < 0:
-            raise ValueError("unbalanced literal before AT TIME ZONE")
+    if kind == "lit":
         # typed literal prefix (TIMESTAMP '...' / DATE '...')
         m = re.search(r"(?i)\b(TIMESTAMP|DATE|TIME)\s*$", sql[:k])
         return m.start(1) if m else k
@@ -912,16 +713,14 @@ def _rewrite_at_time_zone(sql: str) -> str:
     Postfix operator, so the rewrite backward-scans the operand; a
     non-literal zone raises (cannot translate at rewrite time)."""
     pat = re.compile(r"\bAT\s+TIME\s+ZONE\s*('[^']*')?", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[0]
+    while m := pat.search(mask(sql)):
         if not m.group(1):
             raise ValueError("AT TIME ZONE requires a string-literal zone")
         start = _operand_start(sql, m.start())
         operand = sql[start : m.start()].strip()
-        sql = f"{sql[:start]}to_utc_timestamp({operand}, {m.group(1)}){sql[m.end():]}"
+        zone = sql[m.start(1) : m.end(1)]
+        sql = f"{sql[:start]}to_utc_timestamp({operand}, {zone}){sql[m.end():]}"
+    return sql
 
 
 def rewrite_temp_names(sql: str) -> str:
@@ -932,9 +731,7 @@ def rewrite_temp_names(sql: str) -> str:
     The script runner calls this BEFORE statement classification (its
     CREATE/COPY regexes match plain identifiers). Collision caveat
     (documented): a real table literally named rs_tmp_<x> would alias."""
-    masked, lits = _mask_literals(sql)
-    masked = re.sub(r"#(\w+)", r"rs_tmp_\1", masked)
-    return _unmask_literals(masked, lits)
+    return sub_outside_quotes(r"#(\w+)", r"rs_tmp_\1", sql)
 
 
 # PartiQL unnest (Redshift SUPER navigation in FROM): `FROM t a,
@@ -958,11 +755,11 @@ def _rewrite_partiql_unnest(sql: str) -> str:
     Redshift's PartiQL array iteration over the engine's array-typed
     columns (the SUPER-array analog; object navigation stays on
     get_json_object/from_json)."""
-    masked, lits = _mask_literals(sql)
+    masked, lits = protect(sql)
     while True:
         m = _PARTIQL_UNNEST.search(masked)
         if m is None:
-            return _unmask_literals(masked, lits)
+            return restore(masked, lits)
         head, alias, _lv, col, elem, idx = m.groups()
         if idx:
             repl = (
@@ -1010,19 +807,7 @@ def _strip_outer_parens(s: str) -> str:
     """Strip balanced outermost parentheses: '((LEVEL <= 3))' → 'LEVEL <= 3'.
     Leaves '(a) AND (b)'-shaped text alone (the parens don't span it)."""
     s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        spans = True
-        for i, ch in enumerate(s):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    spans = False
-                    break
-        if not spans:
-            break
+    while s.startswith("(") and close_paren(s, 0) == len(s):
         s = s[1:-1].strip()
     return s
 
@@ -1082,13 +867,13 @@ def _rewrite_connect_by(sql: str) -> str:
     broadcasts; a wide tree's doesn't), so no static join hint is
     emitted here.
     """
-    masked, lits = _mask_literals(sql)
-    cbs = _depth0_matches(masked, _CONNECT_BY_KW)
+    masked, lits = protect(sql)
+    cbs = top_matches(masked, _CONNECT_BY_KW)
     if not cbs:
         return sql
-    sws = _depth0_matches(masked, _START_WITH_KW)
-    selects = _depth0_matches(masked, _SELECT_KW)
-    froms = _depth0_matches(masked, _FROM_KW)
+    sws = top_matches(masked, _START_WITH_KW)
+    selects = top_matches(masked, _SELECT_KW)
+    froms = top_matches(masked, _FROM_KW)
     if len(cbs) != 1 or len(sws) != 1 or len(selects) != 1 or len(froms) != 1:
         raise ValueError(
             "CONNECT BY: only one top-level SELECT ... FROM <table> "
@@ -1104,7 +889,7 @@ def _rewrite_connect_by(sql: str) -> str:
     first, second = (sw, cb) if sw.start() < cb.start() else (cb, sw)
     wheres = [
         w
-        for w in _depth0_matches(masked, _WHERE_KW)
+        for w in top_matches(masked, _WHERE_KW)
         if frm.end() <= w.start() < first.start()
     ]
     if wheres:
@@ -1121,7 +906,7 @@ def _rewrite_connect_by(sql: str) -> str:
     cond1 = masked[first.end() : second.start()].strip()
     ends = [
         t
-        for t in _depth0_matches(masked, _CB_TAIL_KW) + _depth0_matches(masked, _WHERE_KW)
+        for t in top_matches(masked, _CB_TAIL_KW) + top_matches(masked, _WHERE_KW)
         if t.start() > second.end()
     ]
     end2 = min((t.start() for t in ends), default=len(masked))
@@ -1131,7 +916,7 @@ def _rewrite_connect_by(sql: str) -> str:
     # exactly like the Oracle-position one — merge them
     if wm2 := re.match(r"(?is)^WHERE\s+(.*)$", tail):
         rest = wm2.group(1)
-        sub = _depth0_matches(rest, _CB_TAIL_KW)
+        sub = top_matches(rest, _CB_TAIL_KW)
         w2 = (rest[: sub[0].start()] if sub else rest).strip().rstrip(";").strip()
         tail = rest[sub[0].start() :].strip() if sub else ""
         where_part = f"({where_part}) AND ({w2})" if where_part else w2
@@ -1172,17 +957,10 @@ def _rewrite_connect_by(sql: str) -> str:
         spec = sm.group(1).strip().rstrip(";").strip()
         # split a trailing LIMIT/OFFSET at paren depth 0
         keys_text, tail_rest = spec, ""
-        depth = 0
-        for i, ch in enumerate(spec):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and i > 0 and spec[i - 1].isspace():
-                if re.match(r"(?i)(LIMIT|OFFSET)\b", spec[i:]):
-                    keys_text, tail_rest = spec[:i].strip(), spec[i:].strip()
-                    break
-        for part in _split_args(keys_text):
+        if lim := top_matches(spec, r"(?i)(?<=\s)(?:LIMIT|OFFSET)\b"):
+            i = lim[0].start()
+            keys_text, tail_rest = spec[:i].strip(), spec[i:].strip()
+        for part in _args(keys_text):
             pm = re.match(
                 r"(?is)^\s*(?P<key>\(.*\)|[\w$]+)"
                 r"(?:\s+(?P<dir>ASC|DESC))?"
@@ -1253,11 +1031,11 @@ def _rewrite_connect_by(sql: str) -> str:
             raise ValueError(
                 "CONNECT BY: a pseudo-column expression argument may "
                 "reference base-table columns only — no PRIOR, LEVEL, or "
-                f"nested pseudo-columns: {_unmask_literals(e, lits)[:60]!r}"
+                f"nested pseudo-columns: {restore(e, lits)[:60]!r}"
             )
         # dedup on the UNMASKED text (sentinel-keyed dedup would carry
         # duplicate derived columns for textually identical expressions)
-        key = _unmask_literals(e, lits)
+        key = restore(e, lits)
         col = exprs.get(key)
         if col is None:
             col = f"__cbx_{len(exprs)}"
@@ -1269,8 +1047,8 @@ def _rewrite_connect_by(sql: str) -> str:
         if txt is None:
             return None
         while m := _SCBP_KW.search(txt):
-            end = _scan_balanced(txt, m.end())
-            col, sep = _split_two_args(txt[m.end() : end - 1])
+            end = close_paren(txt, m.end() - 1)
+            col, sep = _args(txt[m.end() : end - 1], 2)
             col = col.strip()
             if re.fullmatch(r"[\w$]+", col):
                 col = col.lower()
@@ -1287,14 +1065,14 @@ def _rewrite_connect_by(sql: str) -> str:
             # sentinel-keyed dict would carry duplicate path columns
             # through every frontier row
             idx = paths.setdefault(
-                (col, _unmask_literals(sep.strip(), lits)), len(paths)
+                (col, restore(sep.strip(), lits)), len(paths)
             )
             txt = f"{txt[: m.start()]}__cbp_{idx}{txt[end:]}"
         while m := _CBR_KW.search(txt):
             after = txt[m.end() :].lstrip()
             if after.startswith("("):
                 popen = m.end() + (len(txt) - m.end() - len(after))
-                end = _scan_balanced(txt, popen + 1)
+                end = close_paren(txt, popen)
                 inner = txt[popen + 1 : end - 1].strip()
                 if re.fullmatch(r"[\w$]+", inner):
                     col = inner.lower()
@@ -1390,7 +1168,7 @@ def _rewrite_connect_by(sql: str) -> str:
     # loudly at Spark's RECURSION_LEVEL_LIMIT_EXCEEDED instead of hanging).
     level_cap = ""
     if where_part:
-        for conj in _split_depth0_and(where_part):
+        for conj in split_top(where_part, "AND"):
             # balanced outer parens strip so the conjuncts this code itself
             # creates when merging two WHEREs ('(w1) AND (w2)') still push
             if lm := re.match(
@@ -1571,7 +1349,7 @@ def _rewrite_connect_by(sql: str) -> str:
         + (f" WHERE {where_part}" if where_part else "")
         + (f" {tail}" if tail else "")
     )
-    return _unmask_literals(rewritten, lits)
+    return restore(rewritten, lits)
 
 
 def _cyc_key(q: str, prior_cols: list[str]) -> str:
@@ -1594,26 +1372,9 @@ def _cyc_key(q: str, prior_cols: list[str]) -> str:
     return f"concat('|', {key_parts}, '|')"
 
 
-def _split_depth0_and(cond: str) -> list[str]:
-    """Split a (literal-masked) predicate on its top-level ANDs."""
-    parts, depth, start = [], 0, 0
-    for m in re.finditer(r"(?is)\(|\)|\bAND\b", cond):
-        if m.group() == "(":
-            depth += 1
-        elif m.group() == ")":
-            depth -= 1
-        elif depth == 0:
-            parts.append(cond[start : m.start()])
-            start = m.end()
-    parts.append(cond[start:])
-    return parts
-
-
 def _rewrite_replicate(sql: str) -> str:
     """REPLICATE (Redshift's REPEAT alias) → repeat."""
-    masked, lits = _mask_literals(sql)
-    masked = re.sub(r"\bREPLICATE\s*\(", "repeat(", masked, flags=re.IGNORECASE)
-    return _unmask_literals(masked, lits)
+    return sub_outside_quotes(r"\bREPLICATE\s*\(", "repeat(", sql, flags=re.IGNORECASE)
 
 
 def _rewrite_log_base10(sql: str) -> str:
@@ -1624,36 +1385,22 @@ def _rewrite_log_base10(sql: str) -> str:
     call: table-name positions (CREATE TABLE log (...), INSERT INTO
     log (...), FROM/JOIN log, alias log (...)) are excluded by the
     preceding keyword."""
-    pat = re.compile(r"\bLOG\s*\(", re.IGNORECASE)
     name_pos = re.compile(
         r"(?is)\b(?:TABLE|VIEW|INTO|FROM|JOIN|UPDATE|USING|EXISTS|AS)\s*$"
     )
-    while True:
-        hits = [
-            m
-            for m in pat.finditer(sql)
-            if not _in_literal(sql, m.start())
-            and not name_pos.search(sql[: m.start()])
-            and len(_split_args(sql[m.end() : _scan_balanced(sql, m.end()) - 1])) == 1
-        ]
-        if not hits:
-            return sql
-        m = hits[-1]
-        sql = f"{sql[: m.start()]}log10({sql[m.end():]}"
+
+    def render(body: str, m: re.Match) -> str | None:
+        if name_pos.search(m.string[: m.start()]) or len(_args(body)) != 1:
+            return None
+        return f"log10({body})"
+
+    return _rewrite_calls(sql, r"(?i)\bLOG\s*\(", render)
 
 
 def _rewrite_to_hex(sql: str) -> str:
     """TO_HEX(n) → lower(hex(n)) (Redshift emits lowercase hex; Spark's
     hex() is uppercase)."""
-    pat = re.compile(r"\bTO_HEX\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        arg = sql[m.end() : end - 1]
-        sql = f"{sql[: m.start()]}lower(hex({arg})){sql[end:]}"
+    return _rewrite_calls(sql, r"(?i)\bTO_HEX\s*\(", lambda arg, _m: f"lower(hex({arg}))")
 
 
 def _rewrite_json_fns(sql: str) -> str:
@@ -1673,24 +1420,16 @@ def _rewrite_json_fns(sql: str) -> str:
       split takes a REGEX; the \\\\Q quoting keeps Redshift's literal-
       delimiter contract for any delimiter (e.g. '.').
     """
-    out = sql
-    while True:
+
+    def array_length(body: str, _m) -> str | None:
         # Spark's native json_array_length takes ONE arg; only the
         # Redshift 2-arg (null_if_invalid) form needs the flag dropped —
-        # and the rewrite keeps the same function name, so the loop must
-        # skip already-1-arg calls or it never terminates.
-        hits = [
-            m
-            for m in re.finditer(r"\bJSON_ARRAY_LENGTH\s*\(", out, re.IGNORECASE)
-            if not _in_literal(out, m.start())
-            and len(_split_args(out[m.end() : _scan_balanced(out, m.end()) - 1])) > 1
-        ]
-        if not hits:
-            break
-        m = hits[-1]
-        end = _scan_balanced(out, m.end())
-        args = _split_args(out[m.end() : end - 1])
-        flag = args[1].strip().lower()
+        # and the rewrite keeps the same function name, so already-1-arg
+        # calls are left alone or the rewrite never terminates.
+        args = _args(body)
+        if len(args) == 1:
+            return None
+        flag = args[1].lower()
         if flag != "true":
             # error-on-invalid is the semantics Spark's lenient
             # json_array_length cannot express — loud, never silent;
@@ -1702,27 +1441,17 @@ def _rewrite_json_fns(sql: str) -> str:
                 "true (the error-on-invalid form is unsupported — Spark "
                 f"returns NULL on malformed input); got {flag[:30]!r}"
             )
-        out = f"{out[: m.start()]}json_array_length({args[0]}){out[end:]}"
-    while True:
-        hits = [
-            m
-            for m in re.finditer(
-                r"\bJSON_EXTRACT_ARRAY_ELEMENT_TEXT\s*\(", out, re.IGNORECASE
-            )
-            if not _in_literal(out, m.start())
-        ]
-        if not hits:
-            break
-        m = hits[-1]
-        end = _scan_balanced(out, m.end())
-        args = _split_args(out[m.end() : end - 1])
-        if len(args) < 2 or not re.fullmatch(r"\d+", args[1].strip()):
+        return f"json_array_length({args[0]})"
+
+    def array_element(body: str, _m) -> str:
+        args = _args(body)
+        if len(args) < 2 or not re.fullmatch(r"\d+", args[1]):
             raise ValueError(
                 "JSON_EXTRACT_ARRAY_ELEMENT_TEXT: position must be an integer "
-                f"literal (got {args[1].strip()[:30]!r})" if len(args) >= 2
+                f"literal (got {args[1][:30]!r})" if len(args) >= 2
                 else "JSON_EXTRACT_ARRAY_ELEMENT_TEXT needs (json, pos)"
             )
-        if len(args) >= 3 and args[2].strip().lower() != "true":
+        if len(args) >= 3 and args[2].lower() != "true":
             # mirror JSON_ARRAY_LENGTH: the error-on-invalid form cannot
             # be expressed over Spark's lenient get_json_object, and a
             # non-literal flag cannot be resolved at rewrite time — loud
@@ -1731,61 +1460,38 @@ def _rewrite_json_fns(sql: str) -> str:
                 "JSON_EXTRACT_ARRAY_ELEMENT_TEXT: null_if_invalid must be "
                 "the literal true (the error-on-invalid form is "
                 "unsupported — Spark returns NULL on malformed input); "
-                f"got {args[2].strip()[:30]!r}"
+                f"got {args[2][:30]!r}"
             )
-        out = (
-            f"{out[: m.start()]}get_json_object({args[0]}, "
-            f"'$[{args[1].strip()}]'){out[end:]}"
+        return f"get_json_object({args[0]}, '$[{args[1]}]')"
+
+    def is_valid(j: str, m: re.Match) -> str:
+        # first-NON-WHITESPACE-char probe: JSON permits leading
+        # tabs/newlines too, which Spark's ltrim (space-only) would
+        # leave in place — a regex anchor classifies correctly
+        probe = "" if m.group(1) else "NOT "
+        return (
+            f"(try_parse_json({j}) IS NOT NULL "
+            f"AND {probe}regexp_like({j}, '^\\\\s*\\\\['))"
         )
-    for kw, want_array in (("IS_VALID_JSON_ARRAY", True), ("IS_VALID_JSON", False)):
-        while True:
-            hits = [
-                m
-                for m in re.finditer(rf"\b{kw}\s*\(", out, re.IGNORECASE)
-                if not _in_literal(out, m.start())
-            ]
-            if not hits:
-                break
-            m = hits[-1]
-            end = _scan_balanced(out, m.end())
-            j = out[m.end() : end - 1]
-            # first-NON-WHITESPACE-char probe: JSON permits leading
-            # tabs/newlines too, which Spark's ltrim (space-only) would
-            # leave in place — a regex anchor classifies correctly
-            probe = "" if want_array else "NOT "
-            out = (
-                f"{out[: m.start()]}(try_parse_json({j}) IS NOT NULL "
-                f"AND {probe}regexp_like({j}, '^\\\\s*\\\\[')){out[end:]}"
-            )
-    while True:
-        hits = [
-            m
-            for m in re.finditer(r"\bSPLIT_TO_ARRAY\s*\(", out, re.IGNORECASE)
-            if not _in_literal(out, m.start())
-        ]
-        if not hits:
-            break
-        m = hits[-1]
-        end = _scan_balanced(out, m.end())
-        s, d = _split_two_args(out[m.end() : end - 1])
-        out = (
-            f"{out[: m.start()]}split({s}, concat('\\\\Q', {d}, '\\\\E'))"
-            f"{out[end:]}"
-        )
-    return out
+
+    def split_to_array(body: str, _m) -> str:
+        s, d = _args(body, 2)
+        return f"split({s}, concat('\\\\Q', {d}, '\\\\E'))"
+
+    sql = _rewrite_calls(sql, r"(?i)\bJSON_ARRAY_LENGTH\s*\(", array_length)
+    sql = _rewrite_calls(sql, r"(?i)\bJSON_EXTRACT_ARRAY_ELEMENT_TEXT\s*\(", array_element)
+    sql = _rewrite_calls(sql, r"(?i)\bIS_VALID_JSON(_ARRAY)?\s*\(", is_valid)
+    return _rewrite_calls(sql, r"(?i)\bSPLIT_TO_ARRAY\s*\(", split_to_array)
 
 
 def _rewrite_strtol(sql: str) -> str:
     """STRTOL(str, base) → CAST(conv(str, base, 10) AS BIGINT)."""
-    pat = re.compile(r"\bSTRTOL\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        s, base = _split_two_args(sql[m.end() : end - 1])
-        sql = f"{sql[: m.start()]}CAST(conv({s}, {base}, 10) AS BIGINT){sql[end:]}"
+
+    def render(body: str, _m) -> str:
+        s, base = _args(body, 2)
+        return f"CAST(conv({s}, {base}, 10) AS BIGINT)"
+
+    return _rewrite_calls(sql, r"(?i)\bSTRTOL\s*\(", render)
 
 
 def _rewrite_difference(sql: str) -> str:
@@ -1794,57 +1500,45 @@ def _rewrite_difference(sql: str) -> str:
     native soundex(). Redshift documents the result as 'the number of
     matching characters' of the codes; this is the position-wise
     reading (identical codes → 4 either way)."""
-    pat = re.compile(r"\bDIFFERENCE\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        a, b = _split_two_args(sql[m.end() : end - 1])
+
+    def render(body: str, _m) -> str:
+        a, b = _args(body, 2)
         terms = " + ".join(
             f"(CASE WHEN substring(soundex({a}), {i}, 1) = "
             f"substring(soundex({b}), {i}, 1) THEN 1 ELSE 0 END)"
             for i in (1, 2, 3, 4)
         )
-        sql = f"{sql[: m.start()]}({terms}){sql[end:]}"
+        return f"({terms})"
+
+    return _rewrite_calls(sql, r"(?i)\bDIFFERENCE\s*\(", render)
 
 
 def _rewrite_get_byte(sql: str) -> str:
     """GET_BYTE(expr, offset) → the 0-based byte value via a binary
     substring (hex → base-10)."""
-    pat = re.compile(r"\bGET_BYTE\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        a, off = _split_two_args(sql[m.end() : end - 1])
-        sql = (
-            f"{sql[: m.start()]}CAST(conv(hex(substring(CAST({a} AS BINARY), "
-            f"({off}) + 1, 1)), 16, 10) AS INT){sql[end:]}"
+
+    def render(body: str, _m) -> str:
+        a, off = _args(body, 2)
+        return (
+            f"CAST(conv(hex(substring(CAST({a} AS BINARY), "
+            f"({off}) + 1, 1)), 16, 10) AS INT)"
         )
+
+    return _rewrite_calls(sql, r"(?i)\bGET_BYTE\s*\(", render)
 
 
 def _rewrite_cmp_fns(sql: str) -> str:
     """DATE_CMP / TIMESTAMP_CMP / DATE_CMP_TIMESTAMP /
     TIMESTAMP_CMP_DATE (a, b) → the -1/0/+1 CASE comparison (Spark
     compares date↔timestamp operands directly)."""
-    pat = re.compile(
-        r"\b(?:DATE_CMP(?:_TIMESTAMP)?|TIMESTAMP_CMP(?:_DATE)?)\s*\(", re.IGNORECASE
+
+    def render(body: str, _m) -> str:
+        a, b = _args(body, 2)
+        return f"CASE WHEN ({a}) < ({b}) THEN -1 WHEN ({a}) > ({b}) THEN 1 ELSE 0 END"
+
+    return _rewrite_calls(
+        sql, r"(?i)\b(?:DATE_CMP(?:_TIMESTAMP)?|TIMESTAMP_CMP(?:_DATE)?)\s*\(", render
     )
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        a, b = _split_two_args(sql[m.end() : end - 1])
-        sql = (
-            f"{sql[: m.start()]}CASE WHEN ({a}) < ({b}) THEN -1 "
-            f"WHEN ({a}) > ({b}) THEN 1 ELSE 0 END{sql[end:]}"
-        )
 
 
 def _rewrite_quote_fns(sql: str) -> str:
@@ -1852,18 +1546,11 @@ def _rewrite_quote_fns(sql: str) -> str:
     QUOTE_LITERAL(s) → '-wrapped likewise (Redshift/Postgres quoting
     helpers; pure string expressions in both engines)."""
     for kw, q, esc in (("QUOTE_IDENT", '"', '""'), ("QUOTE_LITERAL", "''", "''''")):
-        pat = re.compile(rf"\b{kw}\s*\(", re.IGNORECASE)
-        while True:
-            hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-            if not hits:
-                break
-            m = hits[-1]
-            end = _scan_balanced(sql, m.end())
-            arg = sql[m.end() : end - 1]
-            sql = (
-                f"{sql[: m.start()]}concat('{q}', "
-                f"replace({arg}, '{q}', '{esc}'), '{q}'){sql[end:]}"
-            )
+
+        def render(arg: str, _m, q=q, esc=esc) -> str:
+            return f"concat('{q}', replace({arg}, '{q}', '{esc}'), '{q}')"
+
+        sql = _rewrite_calls(sql, rf"(?i)\b{kw}\s*\(", render)
     return sql
 
 
@@ -1872,14 +1559,9 @@ def _rewrite_to_number(sql: str) -> str:
     stripped, typed DECIMAL(p, s) from the format's digit layout.
     Supported format alphabet: 9 0 , . $ S — anything else raises
     (loud-on-unsupported, the module policy)."""
-    pat = re.compile(r"\bTO_NUMBER\s*\(", re.IGNORECASE)
-    while True:
-        hits = [m for m in pat.finditer(sql) if not _in_literal(sql, m.start())]
-        if not hits:
-            return sql
-        m = hits[-1]
-        end = _scan_balanced(sql, m.end())
-        expr, fmt = _split_two_args(sql[m.end() : end - 1])
+
+    def render(body: str, _m) -> str:
+        expr, fmt = _args(body, 2)
         fm = re.match(r"^\s*'([^']*)'\s*$", fmt)
         if fm is None:
             raise ValueError(f"TO_NUMBER: format must be a string literal, got {fmt!r}")
@@ -1892,10 +1574,12 @@ def _rewrite_to_number(sql: str) -> str:
         prec, scale = digits[0] + (digits[1] if len(digits) > 1 else 0), (
             digits[1] if len(digits) > 1 else 0
         )
-        sql = (
-            f"{sql[: m.start()]}CAST(replace(replace({expr}, ',', ''), '$', '') "
-            f"AS DECIMAL({prec},{scale})){sql[end:]}"
+        return (
+            f"CAST(replace(replace({expr}, ',', ''), '$', '') "
+            f"AS DECIMAL({prec},{scale}))"
         )
+
+    return _rewrite_calls(sql, r"(?i)\bTO_NUMBER\s*\(", render)
 
 
 _CAST_SPELLINGS = {
@@ -1917,53 +1601,46 @@ def _rewrite_type_spellings(sql: str) -> str:
     ``CAST/CONVERT`` tail (``AS <type>[(p[,s])])``, never as a bare
     word, so a column actually named ``int8`` survives. DDL column
     lists have their own normalizer (script_runner._normalize_ddl_types)."""
-    masked, lits = _mask_literals(sql)
-    masked = re.sub(r"\bDOUBLE\s+PRECISION\b", "DOUBLE", masked, flags=re.IGNORECASE)
-    masked = re.sub(r"\bCHARACTER\s+VARYING\b", "VARCHAR", masked, flags=re.IGNORECASE)
+    sql = sub_outside_quotes(r"(?i)\bDOUBLE\s+PRECISION\b", "DOUBLE", sql)
+    sql = sub_outside_quotes(r"(?i)\bCHARACTER\s+VARYING\b", "VARCHAR", sql)
     names = "|".join(_CAST_SPELLINGS)
-    masked = re.sub(
-        rf"(::\s*)({names})\b",
+    sql = sub_outside_quotes(
+        rf"(?i)(::\s*)({names})\b",
         lambda m: m.group(1) + _CAST_SPELLINGS[m.group(2).upper()],
-        masked,
-        flags=re.IGNORECASE,
+        sql,
     )
-    masked = re.sub(
-        rf"(\bAS\s+)({names})(\s*(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\))?\s*\))",
+    sql = sub_outside_quotes(
+        rf"(?i)(\bAS\s+)({names})(\s*(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\))?\s*\))",
         lambda m: m.group(1) + _CAST_SPELLINGS[m.group(2).upper()] + m.group(3),
-        masked,
-        flags=re.IGNORECASE,
+        sql,
     )
     # length-less VARCHAR casts are valid Redshift (unbounded); Spark's
     # parser demands a length — STRING is the unbounded spelling
-    masked = re.sub(r"(::\s*)VARCHAR(?!\s*\()", r"\1STRING", masked, flags=re.IGNORECASE)
-    masked = re.sub(
-        r"(\bAS\s+)VARCHAR(\s*\))", r"\1STRING\2", masked, flags=re.IGNORECASE
-    )
-    return _unmask_literals(masked, lits)
+    sql = sub_outside_quotes(r"(?i)(::\s*)VARCHAR(?!\s*\()", r"\1STRING", sql)
+    return sub_outside_quotes(r"(?i)(\bAS\s+)VARCHAR(\s*\))", r"\1STRING\2", sql)
 
 
 def _rewrite_now(sql: str) -> str:
-    masked, lits = _mask_literals(sql)
-    masked = re.sub(r"\bGETDATE\s*\(\s*\)", "current_timestamp()", masked, flags=re.IGNORECASE)
-    masked = re.sub(r"\bSYSDATE\b", "current_timestamp()", masked, flags=re.IGNORECASE)
-    return _unmask_literals(masked, lits)
+    sql = sub_outside_quotes(r"(?i)\bGETDATE\s*\(\s*\)", "current_timestamp()", sql)
+    return sub_outside_quotes(r"(?i)\bSYSDATE\b", "current_timestamp()", sql)
 
 
 def _strip_storage_clauses(sql: str) -> str:
-    masked, lits = _mask_literals(sql)
-    masked = re.sub(r"\bDISTSTYLE\s+\w+", "", masked, flags=re.IGNORECASE)
-    masked = re.sub(r"\b(DISTKEY|SORTKEY|INTERLEAVED\s+SORTKEY|COMPOUND\s+SORTKEY)\s*\([^)]*\)", "", masked, flags=re.IGNORECASE)
-    masked = re.sub(r"\bSORTKEY\s+AUTO\b", "", masked, flags=re.IGNORECASE)
-    masked = re.sub(r"\bBACKUP\s+(?:YES|NO)\b", "", masked, flags=re.IGNORECASE)
-    masked = re.sub(r"\bENCODE\s+\w+", "", masked, flags=re.IGNORECASE)
-    return _unmask_literals(masked, lits)
+    for pat in (
+        r"\bDISTSTYLE\s+\w+",
+        r"\b(DISTKEY|SORTKEY|INTERLEAVED\s+SORTKEY|COMPOUND\s+SORTKEY)\s*\([^)]*\)",
+        r"\bSORTKEY\s+AUTO\b",
+        r"\bBACKUP\s+(?:YES|NO)\b",
+        r"\bENCODE\s+\w+",
+    ):
+        sql = sub_outside_quotes(pat, "", sql, flags=re.IGNORECASE)
+    return sql
 
 
 def translate_redshift_sql(sql: str) -> str:
     """Rewrite Redshift-dialect SQL into Spark SQL (subset; see module
     docstring). Pure text transformation — inspectable and testable.
-    Comments are stripped FIRST: every scanner below tracks literal
-    parity, which an apostrophe inside a comment would flip.
+    Comments are stripped first, so no rewrite sees them.
     _rewrite_top runs before _rewrite_qualify so TOP + QUALIFY composes
     (qualify keeps the appended LIMIT in its tail)."""
     sql = strip_sql_comments(sql)

@@ -253,6 +253,14 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sql_redshift_etl_spark.functions import lexer
+from sql_redshift_etl_spark.functions.lexer import (
+    close_paren,
+    mask,
+    partition_top,
+    split_top,
+    sub_outside_quotes,
+)
 from sql_redshift_etl_spark.functions.redshift_sql import (
     rewrite_temp_names,
     strip_sql_comments,
@@ -268,32 +276,10 @@ strip_comments = strip_sql_comments
 
 
 def split_statements(script: str) -> list[str]:
-    """Split a script on ``;`` outside string literals and outside
-    ``$$``-dollar-quoted bodies (CREATE PROCEDURE ... AS $$ ... $$)."""
-    stmts: list[str] = []
-    buf: list[str] = []
-    in_quote = False
-    in_dollar = False
-    s = strip_comments(script)
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if not in_quote and ch == "$" and s.startswith("$$", i):
-            in_dollar = not in_dollar
-            buf.append("$$")
-            i += 2
-            continue
-        if ch == "'" and not in_dollar:
-            in_quote = not in_quote
-            buf.append(ch)
-        elif ch == ";" and not in_quote and not in_dollar:
-            stmts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    stmts.append("".join(buf))
-    return [s.strip() for s in stmts if s.strip()]
+    """Split a script on ``;`` outside literals, quoted identifiers and
+    ``$$`` bodies (CREATE PROCEDURE ... AS $$ ... $$), comments removed
+    (lexer.split_statements)."""
+    return lexer.split_statements(script)
 
 
 _NOOP = re.compile(
@@ -363,7 +349,7 @@ def _parse_func_params(params: str) -> list[str]:
     """Parameter NAMES from a SQL-UDF signature; unnamed (type-only)
     parameters are referenced as $N and get positional placeholders."""
     names: list[str] = []
-    for i, p in enumerate(_split_top_commas(params)):
+    for i, p in enumerate(split_top(params, ",")):
         p = p.strip()
         if not p:
             continue
@@ -382,13 +368,10 @@ def _inline_sql_udfs(sql: str, funcs: dict[str, tuple[list[str], str]]) -> str:
         changed = False
         for fname, (params, expr) in funcs.items():
             pat = re.compile(rf"(?<![\w$]){re.escape(fname)}\s*\(", re.IGNORECASE)
-            while True:
-                hits = [m for m in pat.finditer(sql) if not _in_lit(sql, m.start())]
-                if not hits:
-                    break
+            while hits := list(pat.finditer(mask(sql))):
                 m = hits[-1]
-                end = _scan_balanced_fwd(sql, m.end())
-                args = [a.strip() for a in _split_top_commas(sql[m.end() : end - 1]) if a.strip()]
+                end = close_paren(sql, m.end() - 1)
+                args = [a.strip() for a in split_top(sql[m.end() : end - 1], ",") if a.strip()]
                 if len(args) != len(params):
                     raise ValueError(
                         f"{fname}(): expected {len(params)} argument(s), got {len(args)}"
@@ -405,10 +388,6 @@ def _inline_sql_udfs(sql: str, funcs: dict[str, tuple[list[str], str]]) -> str:
         if not changed:
             return sql
     raise ValueError("SQL UDF inlining exceeded depth 16 (recursive definition?)")
-
-
-def _in_lit(sql: str, pos: int) -> bool:
-    return sql.count("'", 0, pos) % 2 == 1
 
 
 # Redshift scalar Python UDFs: `CREATE FUNCTION f(a type, ...) RETURNS
@@ -474,7 +453,7 @@ def _parse_func_param_types(params: str) -> list[str]:
     VARCHAR(10)' -> ['FLOAT8', 'VARCHAR']); a bare type (unnamed param)
     passes through as itself."""
     types: list[str] = []
-    for p in _split_top_commas(params):
+    for p in split_top(params, ","):
         p = p.strip()
         if not p:
             continue
@@ -570,56 +549,6 @@ _DELETE = re.compile(
 _UPDATE = re.compile(r"^UPDATE\s+([\w.]+)\s+SET\s+(.+)$", re.IGNORECASE | re.DOTALL)
 
 
-def _split_set_where(body: str) -> tuple[str, str | None]:
-    """Split an UPDATE's SET body from its optional WHERE at the TOP
-    level only (paren- and quote-aware): a WHERE inside a subquery
-    assignment like ``SET v = (SELECT max(x) FROM s WHERE k = 1)`` or
-    inside a string literal is content, not the clause keyword."""
-    depth, in_quote = 0, False
-    n = len(body)
-    for i, ch in enumerate(body):
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and body[i : i + 5].upper() == "WHERE"
-                and i > 0
-                and body[i - 1].isspace()
-                and (i + 5 == n or not (body[i + 5].isalnum() or body[i + 5] == "_"))
-            ):
-                return body[:i].strip(), body[i + 5 :].strip()
-    return body.strip(), None
-
-
-def _split_top_kw(body: str, kw: str) -> tuple[str, str | None]:
-    """Split ``body`` at the first TOP-LEVEL occurrence of keyword ``kw``
-    (paren- and quote-aware) — same contract as _split_set_where, for the
-    UPDATE ... FROM clause (a FROM inside a subquery assignment or a
-    SUBSTRING(x FROM 2) sits at depth > 0 and is content)."""
-    depth, in_quote = 0, False
-    n, k = len(body), len(kw)
-    for i, ch in enumerate(body):
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                depth == 0
-                and body[i : i + k].upper() == kw
-                and i > 0
-                and body[i - 1].isspace()
-                and (i + k == n or not (body[i + k].isalnum() or body[i + k] == "_"))
-            ):
-                return body[:i].strip(), body[i + k :].strip()
-    return body.strip(), None
 _CREATE_LIKE = re.compile(
     r"^CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*\(\s*LIKE\s+([\w.]+)\s*(INCLUDING|EXCLUDING)?\s*(?:DEFAULTS)?\s*\)\s*$",
     re.IGNORECASE,
@@ -714,22 +643,6 @@ _CREATE_EXTERNAL_TAIL = re.compile(
 )
 
 
-def _scan_balanced_fwd(text: str, i: int) -> int:
-    """Index just past the paren that closes the one opened before ``i``
-    (quote-aware) — the column list of CREATE EXTERNAL TABLE contains
-    nested parens (VARCHAR(8), DECIMAL(18,2)) a non-greedy regex chops."""
-    depth, in_quote = 1, False
-    while depth:
-        ch = text[i]
-        if ch == "'":
-            in_quote = not in_quote
-        elif not in_quote:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-        i += 1
-    return i
 # Redshift MERGE (the last SQL-DML spelling): MERGE INTO tgt [AS a]
 # USING src [AS b] ON cond WHEN MATCHED THEN {UPDATE SET ...|DELETE}
 # WHEN NOT MATCHED THEN INSERT [(cols)] VALUES (...). Spark's own MERGE
@@ -776,7 +689,7 @@ def _parse_proc_params(params: str) -> list[tuple[str, str, str]]:
     result — Redshift's contract. OUT stays loud because Redshift
     itself forbids OUT arguments in a SQL-level CALL."""
     out: list[tuple[str, str, str]] = []
-    for p in _split_top_commas(params):
+    for p in split_top(params, ","):
         p = p.strip()
         if not p:
             continue
@@ -918,20 +831,6 @@ def _inout_result(spark: SparkSession, ce: "_CallEnd"):
     )
 
 
-def _mask_quoted(text: str) -> str:
-    """Copy of *text* with single-quoted literal contents blanked, so
-    keyword/semicolon scans cannot match inside strings ('' escapes
-    toggle twice, landing back in-literal)."""
-    out = list(text)
-    in_q = False
-    for i, ch in enumerate(text):
-        if ch == "'":
-            in_q = not in_q
-        elif in_q:
-            out[i] = " "
-    return "".join(out)
-
-
 # One token scanner drives all block matching. Order matters: END IF /
 # END LOOP before END (CASE closer), IF EXISTS / IF NOT EXISTS (DDL
 # modifiers, no block) before IF. WHILE/FOR heads don't open a block —
@@ -1023,7 +922,7 @@ def _find_block_close(masked: str, pos: int, want: str, what: str) -> re.Match:
 
 
 def _sub_skip_shadowed(body: str, var: str, pattern: str, repl) -> str:
-    """``_sub_outside_quotes`` applied plpgsql-SCOPED for a loop
+    """``sub_outside_quotes`` applied plpgsql-SCOPED for a loop
     variable *var*: a nested ``FOR <same-name> IN`` REBINDS the name, so
     the nested loop's BODY is skipped (the inner variable shadows the
     outer there), while the nested loop's range-bound / control-query
@@ -1032,12 +931,12 @@ def _sub_skip_shadowed(body: str, var: str, pattern: str, repl) -> str:
     substitution and the record-FOR ``var.field`` substitution — the r9
     review found the shadowing bug existed identically in both paths.
     Quoted literals are never touched (same discipline as _subst_vars)."""
-    masked = _mask_quoted(body)
+    masked = mask(body)
     shadow = re.compile(rf"(?is)\bFOR\s+{re.escape(var)}\s+IN\b")
     loop_tok = re.compile(r"(?is)\bLOOP\b")
 
     def _sub(seg: str) -> str:
-        return _sub_outside_quotes(seg, pattern, repl)
+        return sub_outside_quotes(pattern, repl, seg)
 
     out, pos = [], 0
     while m := shadow.search(masked, pos):
@@ -1088,7 +987,7 @@ def _parse_for(text: str, masked: str, start: int) -> tuple[_ForNode, int]:
     if hm is None:
         raise ValueError(f"FOR: expected 'FOR var IN [REVERSE] a..b LOOP', got {head!r}")
     rng = hm.group(3)
-    dots = _mask_quoted(rng).find("..")
+    dots = mask(rng).find("..")
     em = _find_block_close(masked, lm.end(), "endloop", "FOR")
     if dots < 0:
         # FOR rec IN <query> LOOP — row iteration over a control table
@@ -1099,7 +998,7 @@ def _parse_for(text: str, masked: str, start: int) -> tuple[_ForNode, int]:
             _consume_semi(text, em.end()),
         )
     to_part, by = rng[dots + 2 :].strip(), None
-    if bm := re.match(r"(?is)^(.*?)\sBY\s(.+)$", _mask_quoted(to_part)):
+    if bm := re.match(r"(?is)^(.*?)\sBY\s(.+)$", mask(to_part)):
         by = to_part[len(bm.group(1)) + 4 :].strip()
         to_part = to_part[: len(bm.group(1))].strip()
     node = _ForNode(
@@ -1400,7 +1299,7 @@ def _parse_plpgsql_nodes(text: str) -> list:
     strings interleaved with control nodes (each block's body stays raw
     text, re-parsed when the block runs)."""
     nodes: list = []
-    masked = _mask_quoted(text)
+    masked = mask(text)
     i, n = 0, len(text)
     while i < n:
         while i < n and (text[i].isspace() or text[i] == ";"):
@@ -1521,7 +1420,7 @@ def _parse_proc_decls(decls: str, proc: str) -> list[tuple[str, str, str | None]
     ctx = proc if proc == "nested block" else f"CREATE PROCEDURE {proc}"
     out: list[tuple[str, str, str | None]] = []
     seen: set[str] = set()
-    for d in _split_top_semis(decls):
+    for d in split_top(decls, ";"):
         d = d.strip()
         if not d:
             continue
@@ -1549,7 +1448,7 @@ def _parse_proc_decls(decls: str, proc: str) -> list[tuple[str, str, str | None]
             seen.add(cm.group(1).lower())
             out.append((cm.group(1).lower(), "CURSOR", cm.group(2).strip()))
             continue
-        if re.search(r"(?i)\b(CURSOR|RECORD|REFCURSOR|CONSTANT|ALIAS)\b", _mask_quoted(d)):
+        if re.search(r"(?i)\b(CURSOR|RECORD|REFCURSOR|CONSTANT|ALIAS)\b", mask(d)):
             raise ValueError(
                 f"{ctx}: DECLARE supports scalar variables "
                 f"and 'name CURSOR FOR <query>' only, not {d[:50]!r}"
@@ -1568,17 +1467,6 @@ def _parse_proc_decls(decls: str, proc: str) -> list[tuple[str, str, str | None]
         seen.add(hm.group(1).lower())
         out.append((hm.group(1).lower(), _normalize_ddl_types(hm.group(2).strip()), default))
     return out
-
-
-def _split_top_semis(text: str) -> list[str]:
-    masked = _mask_quoted(text)
-    parts, start = [], 0
-    for i, ch in enumerate(masked):
-        if ch == ";":
-            parts.append(text[start:i])
-            start = i + 1
-    parts.append(text[start:])
-    return parts
 
 
 class _LazyFound:
@@ -1657,9 +1545,7 @@ def _subst_vars(scope: dict, sql: str) -> str:
                 v = _cell[1] = v.resolve()
             return _sql_literal(v, _cell[0])
 
-        sql = _sub_outside_quotes(
-            sql, rf"(?i)(?<![\w$]){re.escape(name)}(?![\w$])", _repl
-        )
+        sql = sub_outside_quotes(rf"(?i)(?<![\w$]){re.escape(name)}(?![\w$])", _repl, sql)
     return sql
 
 
@@ -1855,45 +1741,15 @@ def _parse_io_options(clause: str, stmt_kind: str) -> dict:
     return opts
 
 
-def _split_top_commas(body: str) -> list[str]:
-    """Split on top-level commas (paren/quote-aware)."""
-    parts: list[str] = []
-    depth, in_quote, start = 0, False, 0
-    for i, ch in enumerate(body):
-        if ch == "'":
-            in_quote = not in_quote
-        elif in_quote:
-            continue
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(body[start:i])
-            start = i + 1
-    parts.append(body[start:])
-    return parts
-
-
 def _split_assignments(body: str) -> list[tuple[str, str]]:
-    """Split ``a = e1, b = e2`` on top-level commas (paren/quote-aware)."""
+    """Split ``a = e1, b = e2`` on top-level commas."""
     out = []
-    for p in _split_top_commas(body):
+    for p in split_top(body, ","):
         col, _, expr = p.partition("=")
         if not expr:
             raise ValueError(f"malformed SET assignment: {p.strip()!r}")
         out.append((col.strip(), expr.strip()))
     return out
-
-
-def _split_top_and(body: str) -> list[str]:
-    """Split a condition on top-level ``AND`` keywords (paren/quote-aware)."""
-    parts: list[str] = []
-    rest: str | None = body
-    while rest is not None:
-        head, rest = _split_top_kw(rest, "AND")
-        parts.append(head)
-    return parts
 
 
 class _ScriptState:
@@ -2102,14 +1958,6 @@ def _cast_positional(sel: DataFrame, target: DataFrame, table: str) -> DataFrame
     )
 
 
-def _sub_outside_quotes(text: str, pattern: str, repl) -> str:
-    """``re.sub`` applied only OUTSIDE single-quoted string literals, so
-    an alias-looking token inside a literal ('t.x is a label') survives."""
-    segs = text.split("'")
-    segs[0::2] = [re.sub(pattern, repl, s) for s in segs[0::2]]
-    return "'".join(segs)
-
-
 def _apply_search_path(state: "_ScriptState", sql: str) -> str:
     """``SET search_path`` resolution, read-side: an unqualified name
     that has no plain binding rewrites to ``<schema>__<name>`` for the
@@ -2126,10 +1974,8 @@ def _apply_search_path(state: "_ScriptState", sql: str) -> str:
             plain = bound[len(s) + 2 :]
             if plain in state.tables:
                 continue
-            sql = _sub_outside_quotes(
-                sql,
-                rf"(?i)(?<![\w.#$]){re.escape(plain)}(?![\w$])(?!\s*\()",
-                bound,
+            sql = sub_outside_quotes(
+                rf"(?i)(?<![\w.#$]){re.escape(plain)}(?![\w$])(?!\s*\()", bound, sql
             )
     return sql
 
@@ -2141,7 +1987,7 @@ def _prep_stmt_sql(state: "_ScriptState", sql: str) -> str:
     evaluation."""
     sql = rewrite_temp_names(sql)
     for s in state.schemas:
-        sql = _sub_outside_quotes(sql, rf"(?i)\b{re.escape(s)}\s*\.\s*(\w+)", rf"{s}__\1")
+        sql = sub_outside_quotes(rf"(?i)\b{re.escape(s)}\s*\.\s*(\w+)", rf"{s}__\1", sql)
     sql = _apply_search_path(state, sql)
     if state.funcs:
         sql = _inline_sql_udfs(sql, state.funcs)
@@ -2186,7 +2032,7 @@ def _run_merge_into(
 
     from sql_redshift_etl_spark.operators.merge import merge_upsert
 
-    src_spec, after_on = _split_top_kw(rest, "ON")
+    src_spec, after_on = partition_top(rest, "ON")
     if after_on is None:
         raise ValueError(f"MERGE INTO {tgt_name}: missing ON condition")
     sm = re.match(r"(?is)^([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s*$", src_spec)
@@ -2197,7 +2043,7 @@ def _run_merge_into(
             "table first (Redshift's own MERGE takes a table reference)"
         )
     src_name, src_alias = sm.group(1), sm.group(2) or sm.group(1)
-    cond, when_text = _split_top_kw(after_on, "WHEN")
+    cond, when_text = partition_top(after_on, "WHEN")
     remove_duplicates = False
     if when_text is None:
         # Redshift's SIMPLIFIED MERGE: `MERGE INTO t USING s ON cond
@@ -2206,7 +2052,7 @@ def _run_merge_into(
         # rows insert, and duplicate target/source rows on the merge key
         # collapse to one (Redshift's documented semantics for this
         # form; it requires the column lists to be identical).
-        cond, tail = _split_top_kw(cond, "REMOVE")
+        cond, tail = partition_top(cond, "REMOVE")
         if tail is None or not re.match(r"(?is)^DUPLICATES\s*$", tail):
             raise ValueError(f"MERGE INTO {tgt_name}: no WHEN clauses")
         remove_duplicates = True
@@ -2218,7 +2064,7 @@ def _run_merge_into(
 
     # --- ON: AND-ed equality pairs → (target col, source col) keys ----
     keys: list[tuple[str, str]] = []
-    for part in _split_top_and(cond):
+    for part in (p.strip() for p in split_top(cond, "AND")):
         pm = re.match(r"(?is)^\(?\s*([\w.]+)\s*=\s*([\w.]+)\s*\)?\s*$", part)
         sides: dict[str, str] = {}
         for side in (pm.group(1), pm.group(2)) if pm else ():
@@ -2284,13 +2130,13 @@ def _run_merge_into(
             return f"s.{key_rename.get(col.lower(), col)}"
 
         pat = rf"(?i)\b({re.escape(tgt_alias)}|{re.escape(src_alias)})\.(\w+)"
-        return _sub_outside_quotes(expr_text, pat, sub)
+        return sub_outside_quotes(pat, sub, expr_text)
 
     # --- WHEN clauses --------------------------------------------------
     clauses: list[str] = []
     cur: str | None = when_text
     while cur is not None:
-        head, cur = _split_top_kw(cur, "WHEN")
+        head, cur = partition_top(cur, "WHEN")
         clauses.append(head)
     update_set: dict = {}
     insert_cols: list[str] | None = None
@@ -2322,7 +2168,7 @@ def _run_merge_into(
             cl,
         ):
             saw_not_matched = True
-            insert_exprs = [e.strip() for e in _split_top_commas(im.group(2))]
+            insert_exprs = [e.strip() for e in split_top(im.group(2), ",")]
             insert_cols = (
                 [c.strip() for c in im.group(1).split(",")]
                 if im.group(1)
@@ -2734,8 +2580,8 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                     body_txt = raw[7:].strip()
                     # USING is the last clause (plpgsql: EXECUTE cmd
                     # [INTO t,...] [USING e,...]); split it off before INTO
-                    head_txt, using_tail = _split_top_kw(body_txt, "USING")
-                    expr, into_tail = _split_top_kw(head_txt, "INTO")
+                    head_txt, using_tail = partition_top(body_txt, "USING")
+                    expr, into_tail = partition_top(head_txt, "INTO")
                     if not expr:
                         raise ValueError("EXECUTE: empty command-string expression")
                     sql_text = _eval_script_scalar(
@@ -2750,13 +2596,9 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                         # the current scope — one bounded one-row job per
                         # argument) as a typed literal, outside quotes only
                         # — plpgsql's value-not-text parameter contract.
-                        from sql_redshift_etl_spark.functions.redshift_sql import (
-                            _split_args,
-                        )
-
                         rendered: list[str] = []
-                        for a in _split_args(using_tail):
-                            if not a.strip():
+                        for a in (p.strip() for p in split_top(using_tail, ",")):
+                            if not a:
                                 raise ValueError("EXECUTE ... USING: empty argument")
                             vdf = spark.sql(
                                 translate_redshift_sql(
@@ -2775,7 +2617,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                             )
                         used = {
                             int(m.group(1))
-                            for m in re.finditer(r"\$(\d+)", _mask_quoted(sql_text))
+                            for m in re.finditer(r"\$(\d+)", mask(sql_text))
                         }
                         if used and max(used) > len(rendered):
                             raise ValueError(
@@ -2792,10 +2634,8 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                                 "placeholders are numbered from $1"
                             )
                         for i in sorted(range(1, len(rendered) + 1), reverse=True):
-                            sql_text = _sub_outside_quotes(
-                                sql_text,
-                                rf"\${i}(?!\d)",
-                                lambda _m, _lit=rendered[i - 1]: _lit,
+                            sql_text = sub_outside_quotes(
+                                rf"\${i}(?!\d)", lambda _m, _lit=rendered[i - 1]: _lit, sql_text
                             )
                     if into_tail is None:
                         pending.appendleft(sql_text)
@@ -2973,7 +2813,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                     # below — except under STRICT, which only exists in the
                     # variable form, so an undeclared name there is loud)
                     if raw[:6].upper() == "SELECT":
-                        head, tail = _split_top_kw(raw, "INTO")
+                        head, tail = partition_top(raw, "INTO")
                         if tail is not None:
                             tail_s = tail.strip()
                             stricted = re.match(r"(?is)^STRICT\b(.*)$", tail_s)
@@ -3075,8 +2915,8 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                     continue
                 for s in state.schemas:
                     # flatten declared-schema-qualified names to one part
-                    raw = _sub_outside_quotes(
-                        raw, rf"(?i)\b{re.escape(s)}\s*\.\s*(\w+)", rf"{s}__\1"
+                    raw = sub_outside_quotes(
+                        rf"(?i)\b{re.escape(s)}\s*\.\s*(\w+)", rf"{s}__\1", raw
                     )
                 if state.search_path:
                     raw = _apply_search_path(state, raw)
@@ -3087,10 +2927,8 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                     # BINDINGS; an end-of-txn truncation hook would add
                     # state for a spelling Redshift ETLs rarely rely on);
                     # temp tables die at script end either way.
-                    raw = _sub_outside_quotes(
-                        raw,
-                        r"(?i)\s+ON\s+COMMIT\s+(?:PRESERVE\s+ROWS|DELETE\s+ROWS|DROP)",
-                        " ",
+                    raw = sub_outside_quotes(
+                        r"(?i)\s+ON\s+COMMIT\s+(?:PRESERVE\s+ROWS|DELETE\s+ROWS|DROP)", " ", raw
                     )
                 if _CREATE_EXT_FUNC.match(raw):
                     raise ValueError(
@@ -3100,7 +2938,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                         "runs in-engine as an Arrow-batched pandas UDF)"
                     )
                 if hm := _CREATE_FUNC_HEAD.match(raw):
-                    sig_end = _scan_balanced_fwd(raw, hm.end())
+                    sig_end = close_paren(raw, hm.end() - 1)
                     if tm := _CREATE_FUNC_TAIL.match(raw[sig_end:]):
                         # SQL identifiers are case-insensitive (so is
                         # Spark's UDF registry) — one lowercase key per
@@ -3136,7 +2974,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                                 "plpythonu registers as an Arrow-batched "
                                 "pandas UDF; nothing else exists in Redshift"
                             )
-                        body = tm.group(2).strip().rstrip(";").strip()
+                        body = strip_sql_comments(tm.group(2)).strip().rstrip(";").strip()
                         body = re.sub(r"(?is)^SELECT\s+", "", body)
                         if state.py_funcs.pop(fname, None) is not None:
                             # replaced ACROSS languages: calls now inline,
@@ -3165,7 +3003,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                 # dialect front-end must not rewrite a $$ body at define
                 # time (each body statement is rewritten when it RUNS).
                 if hm := _CREATE_PROC_HEAD.match(raw):
-                    sig_end = _scan_balanced_fwd(raw, hm.end())
+                    sig_end = close_paren(raw, hm.end() - 1)
                     tm = _CREATE_PROC_TAIL.match(raw[sig_end:])
                     if tm is None:
                         raise ValueError(
@@ -3173,7 +3011,9 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                             "AS $$ ... $$ LANGUAGE plpgsql"
                         )
                     params = _parse_proc_params(raw[hm.end() : sig_end - 1])
-                    body = tm.group(1).strip()
+                    # the top-level split leaves $$ bodies verbatim; the
+                    # body's own comments go here, with the same lexer
+                    body = strip_sql_comments(tm.group(1)).strip()
                     bm = re.match(
                         r"(?is)^(?:DECLARE\b(.*?))?\s*BEGIN\b(.*?)\bEND\s*;?\s*$", body
                     )
@@ -3184,7 +3024,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                         )
                     decls = _parse_proc_decls(bm.group(1) or "", hm.group(1))
                     body = bm.group(2)
-                    if _toplevel_exception(_mask_quoted(body)):
+                    if _toplevel_exception(mask(body)):
                         # the common real-proc form puts the EXCEPTION
                         # section on the procedure's own outer block
                         # (stripped above) — re-wrap so the whole body
@@ -3212,7 +3052,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                             "script (recursive CALL?)"
                         )
                     params, decls, body = state.procs[name]
-                    args = [a.strip() for a in _split_top_commas(m.group(2)) if a.strip()]
+                    args = [a.strip() for a in split_top(m.group(2), ",") if a.strip()]
                     if len(args) != len(params):
                         raise ValueError(
                             f"CALL {name}: expected {len(params)} argument(s) "
@@ -3292,7 +3132,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                         any(t == "CURSOR" for t, _v in scope.values())
                         or re.search(
                             r"(?i)(?:^|[^\w$])(?:PERFORM|FOUND)(?:[^\w$]|$)",
-                            _mask_quoted(body),
+                            mask(body),
                         )
                     ):
                         # plpgsql's FOUND, maintained by FETCH, PERFORM,
@@ -3319,7 +3159,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                         # reliable column spellings — a CREATE-list
                         # `(..., found <type> ...)` declaration and an
                         # `AS found` alias — and refuse loudly.
-                        _masked_body = _mask_quoted(body)
+                        _masked_body = mask(body)
                         if re.search(
                             r"(?i)[(,]\s*found\s+(?:BOOL|BOOLEAN|SMALLINT|"
                             r"INT|INTEGER|BIGINT|VARCHAR|CHAR|TEXT|REAL|"
@@ -3349,7 +3189,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                     if level == "EXCEPTION":
                         args = [
                             a.strip()
-                            for a in _split_top_commas(m.group(3) or "")
+                            for a in split_top(m.group(3) or "", ",")
                             if a.strip()
                         ]
                         vals = [
@@ -3637,8 +3477,8 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                     # both to the unescaped text before translation
                     inner_sql = inner.replace("''", "'")
                     for s in state.schemas:
-                        inner_sql = _sub_outside_quotes(
-                            inner_sql, rf"(?i)\b{re.escape(s)}\s*\.\s*(\w+)", rf"{s}__\1"
+                        inner_sql = sub_outside_quotes(
+                            rf"(?i)\b{re.escape(s)}\s*\.\s*(\w+)", rf"{s}__\1", inner_sql
                         )
                     if state.funcs:
                         inner_sql = _inline_sql_udfs(inner_sql, state.funcs)
@@ -3762,7 +3602,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                 if _NOOP.match(stmt):
                     continue
                 if (hm := _CREATE_EXTERNAL_HEAD.match(stmt)) and (
-                    (cols_end := _scan_balanced_fwd(stmt, hm.end()))
+                    (cols_end := close_paren(stmt, hm.end() - 1))
                     and (tm := _CREATE_EXTERNAL_TAIL.match(stmt[cols_end:]))
                 ):
                     name = hm.group(1)
@@ -4165,7 +4005,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                         # deleted when ANY source row satisfies cond —
                         # exactly NOT EXISTS for the survivors, which Spark
                         # plans as a left-anti join.
-                        using, where = _split_top_kw(um.group(1), "WHERE")
+                        using, where = partition_top(um.group(1), "WHERE")
                         if where is None:
                             raise ValueError(
                                 f"DELETE FROM {name} USING requires a WHERE join "
@@ -4206,8 +4046,8 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                         )
                 elif m := _UPDATE.match(stmt):
                     name, rest = m.group(1), m.group(2)
-                    sets_from, cond = _split_set_where(rest)
-                    sets, from_text = _split_top_kw(sets_from, "FROM")
+                    sets_from, cond = partition_top(rest, "WHERE")
+                    sets, from_text = partition_top(sets_from, "FROM")
                     base = state.existing(name)
                     assigned = dict(_split_assignments(sets))
                     unknown = set(assigned) - set(base.columns)
@@ -4340,7 +4180,7 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                     # Top-level split only — an INTO inside a subquery or
                     # string stays content.
                     if stmt[:6].upper() == "SELECT":
-                        head, tail = _split_top_kw(stmt, "INTO")
+                        head, tail = partition_top(stmt, "INTO")
                         if tail is not None:
                             if re.match(r"(?is)^\s*STRICT\b", tail):
                                 # STRICT only exists in the plpgsql
@@ -4406,15 +4246,15 @@ def run_redshift_script(spark: SparkSession, script: str) -> DataFrame | None:
                         and e[1].rows is not g["open_cursors"].get(n)
                     ):
                         e[1].rows = None
-                handler = _sub_outside_quotes(
-                    g["handler"],
+                handler = sub_outside_quotes(
                     r"(?i)(?<![\w$])SQLERRM(?![\w$])",
                     lambda _m, _s=_sqlerrm(exc): _s,
+                    g["handler"],
                 )
-                handler = _sub_outside_quotes(
-                    handler,
+                handler = sub_outside_quotes(
                     r"(?i)(?<![\w$])SQLSTATE(?![\w$])",
                     lambda _m, _s=f"'{_classify_sqlstate(exc)}'": _s,
+                    handler,
                 )
                 nodes = _parse_plpgsql_nodes(handler)
                 if g["scope"]:

@@ -52,10 +52,20 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     state explicitly via SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS, which
     wins outright because the state layout is a checkpoint-compatibility
     property an engine should never silently change under a kept
-    checkpoint (these availableNow runs start from fresh checkpoints)."""
+    checkpoint (these availableNow runs start from fresh checkpoints).
+    A set value that is not an integer ≥ 1 raises ValueError."""
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS")
     if env:
-        return int(env)
+        try:
+            n = int(env)
+        except ValueError:
+            n = 0
+        if n < 1:
+            raise ValueError(
+                "SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS must be an integer >= 1, "
+                f"got {env!r}"
+            )
+        return n
     from sql_redshift_etl_spark.scale import parquet_total_rows
 
     rows = parquet_total_rows(f"{sf_dir}/events.parquet") or 0

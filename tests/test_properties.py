@@ -260,32 +260,76 @@ def test_script_merge_into_semantics_random(spark, tgt_rows, src_map):
     assert got == expected
 
 
-@given(
-    st.lists(
-        st.text(
-            alphabet=st.characters(
-                blacklist_characters=";'$", blacklist_categories=("Cs",)
-            ),
-            min_size=1,
-            max_size=30,
-        ).map(str.strip).filter(bool),
-        min_size=1,
-        max_size=6,
-    )
+# A statement as (kind, text) pieces, rendered by one small reference
+# model of the lexer's contract: quoted text ('' / "" escapes inside)
+# hides ; , -- and /* from every scan; a line comment is removed up to
+# its newline and a block comment leaves one space; only the model's
+# own "comma" pieces are top-level commas (the ones inside a call's
+# parentheses are nested).
+_LEX_CODE = st.text(
+    alphabet=st.characters(
+        blacklist_characters=";,'\"$-/()", blacklist_categories=("Cs",)
+    ),
+    min_size=1,
+    max_size=12,
 )
-@settings(max_examples=60, deadline=None)
+_LEX_TRICKY = st.text(alphabet="ab ;,'\"-/*()$\n", max_size=10)
+_LEX_ATOM = st.one_of(
+    _LEX_CODE.map(lambda t: ("code", t)),
+    _LEX_TRICKY.map(lambda t: ("lit", "'" + t.replace("'", "''") + "'")),
+    _LEX_TRICKY.map(lambda t: ("ident", '"' + t.replace('"', '""') + '"')),
+    _LEX_TRICKY.map(lambda t: ("line", "--" + t.replace("\n", " ") + "\n")),
+    _LEX_TRICKY.map(lambda t: ("block", "/*" + t.replace("*/", "* /") + "*/")),
+)
+_LEX_PIECE = st.one_of(
+    _LEX_ATOM,
+    st.just(("comma", ",")),
+    st.lists(_LEX_ATOM, min_size=1, max_size=3).map(lambda atoms: ("call", atoms)),
+)
+
+
+def _lex_text(pieces, comments=True):
+    out = []
+    for k, t in pieces:
+        if k == "call":
+            t = "f(" + ", ".join(_lex_text([a], comments) for a in t) + ")"
+        elif not comments and k in ("line", "block"):
+            t = "\n" if k == "line" else " "
+        out.append(t)
+    return "".join(out)
+
+
+def _lex_model_commas(pieces):
+    parts = [[]]
+    for piece in pieces:
+        if piece[0] == "comma":
+            parts.append([])
+        else:
+            parts[-1].append(piece)
+    return [_lex_text(p) for p in parts]
+
+
+@given(st.lists(st.lists(_LEX_PIECE, min_size=1, max_size=8), min_size=1, max_size=6))
+@settings(max_examples=120, deadline=None)
 def test_split_statements_dollar_quote_roundtrip(stmts):
-    """Statements joined with ';' split back losslessly, and a $$ body
-    containing semicolons/quotes survives as ONE statement."""
+    """Statements joined with ';' split back as the reference model says
+    (quoted ; , -- /* are content, comments removed), each splits on its
+    top-level commas as the model says, and a $$ body containing any of
+    it survives as ONE statement."""
+    from sql_redshift_etl_spark.functions.lexer import split_top
     from sql_redshift_etl_spark.functions.script_runner import split_statements
 
-    joined = ";".join(stmts) + ";"
-    assert split_statements(joined) == [s.strip() for s in stmts if s.strip()]
+    texts = [_lex_text(pieces) for pieces in stmts]
+    want = [m for m in (_lex_text(p, comments=False).strip() for p in stmts) if m]
+    assert split_statements(";".join(texts) + ";") == want
+    for pieces, text in zip(stmts, texts):
+        assert split_top(text, ",") == _lex_model_commas(pieces)
 
-    body = "BEGIN " + "; ".join(stmts) + "; END;"
+    # (a $$ inside the body would end it — dollar quoting has no escape)
+    body = "BEGIN " + "; ".join(t for t in texts if "$$" not in t) + "; END;"
     script = f"CREATE PROCEDURE p() AS $${body}$$ LANGUAGE plpgsql; SELECT 1;"
     parts = split_statements(script)
-    assert len(parts) == 2 and parts[0].endswith("LANGUAGE plpgsql")
+    assert parts == [f"CREATE PROCEDURE p() AS $${body}$$ LANGUAGE plpgsql", "SELECT 1"]
 
 
 @given(

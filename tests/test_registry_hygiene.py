@@ -199,3 +199,24 @@ def test_doc_counts_match_registry():
         f"SURVEY.md §2 status line says {m.group(0)!r} but the registry "
         f"has {n_all} queries / {n_oracled} oracled"
     )
+
+
+def test_only_the_lexer_tracks_quote_state():
+    """One SQL lexer: functions/lexer.py is the only package module that
+    decides what a quoted literal is. Hand-rolled quote tracking (a
+    parity flag, apostrophe counting or splitting, a per-character quote
+    compare) elsewhere fails the build; scan through the lexer's helpers
+    instead."""
+    from pathlib import Path
+
+    pkg = Path(registry.__file__).resolve().parent.parent
+    lexer = pkg / "functions" / "lexer.py"
+    hand_rolled = re.compile(r"""\bin_q(?:uote)?\b|count\("'"|split\("'"\)|== "'\"""")
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != lexer
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if hand_rolled.search(line)
+    ]
+    assert not offenders, f"quote state tracked outside functions/lexer.py: {offenders}"

@@ -5842,7 +5842,7 @@ def test_approx_percentile_disc_rewrite(spark):
 def test_approx_percentile_nested_comma_key(spark):
     """ADVICE r10: a single ORDER BY expression whose text contains a
     FUNCTION-CALL comma (COALESCE(x, 0)) is one sort key, not two — the
-    multi-key reject must be paren-aware (_split_args), and the rewrite
+    multi-key reject must be paren-aware (lexer.split_top), and the rewrite
     must produce the right value with NULLs folded to 0."""
     import pytest as _pytest
 
@@ -6327,3 +6327,132 @@ def test_found_column_collision_is_loud(spark):
             CALL p_c2();
             """,
         )
+
+
+# ---------------------------------------------------------------------------
+# the one SQL lexer (functions/lexer.py) under redshift_sql and script_runner
+# ---------------------------------------------------------------------------
+
+
+def _script_rows(request, script):
+    from sql_redshift_etl_spark.functions.script_runner import run_redshift_script
+
+    out = run_redshift_script(request.getfixturevalue("spark"), script)
+    return [tuple(r) for r in out.collect()]
+
+
+def _translate(sql):
+    from sql_redshift_etl_spark.functions.redshift_sql import translate_redshift_sql
+
+    return translate_redshift_sql(sql)
+
+
+def _split(script):
+    from sql_redshift_etl_spark.functions.script_runner import split_statements
+
+    return split_statements(script)
+
+
+def _strip(sql):
+    from sql_redshift_etl_spark.functions.redshift_sql import strip_sql_comments
+
+    return strip_sql_comments(sql)
+
+
+# name -> (run(request), expected): quoting contexts that a scan which
+# counts apostrophes, or ignores "ident" and $$ bodies, silently misreads.
+_LEXER_REGRESSIONS = {
+    # a plpythonu body reaches Python verbatim: `a -- b` is a + b there
+    "plpythonu_body_keeps_double_minus": (
+        lambda request: _script_rows(
+            request,
+            """
+            CREATE FUNCTION f_lex_sum(a FLOAT, b FLOAT) RETURNS FLOAT AS $$
+                return a -- b
+            $$ LANGUAGE plpythonu;
+            SELECT f_lex_sum(1, 2) AS y;
+            """,
+        ),
+        [(3.0,)],
+    ),
+    "semicolon_in_quoted_identifier": (
+        lambda request: _split('SELECT 1 AS "a;b"; SELECT 2'),
+        ['SELECT 1 AS "a;b"', "SELECT 2"],
+    ),
+    "comma_in_quoted_identifier": (
+        lambda request: _translate("""SELECT JSON_EXTRACT_PATH_TEXT("a,b", 'k') FROM x"""),
+        """SELECT get_json_object("a,b", '$.k') FROM x""",
+    ),
+    "comment_marker_in_quoted_identifier": (
+        lambda request: _strip('SELECT 1 AS "a--b", 2'),
+        'SELECT 1 AS "a--b", 2',
+    ),
+    "datediff_after_apostrophe_in_identifier": (
+        lambda request: _translate("""SELECT "x'y" AS c, DATEDIFF(day, a, b) FROM x"""),
+        """SELECT "x'y" AS c, datediff(cast(b as date), cast(a as date)) FROM x""",
+    ),
+    "to_char_after_apostrophe_in_identifier": (
+        lambda request: _translate("""SELECT "x'y" AS c, TO_CHAR(d, 'YYYY-MM-DD') FROM x"""),
+        """SELECT "x'y" AS c, date_format(d, 'yyyy-MM-dd') FROM x""",
+    ),
+    # schema flattening is a re.sub outside quotes; Spark reads "it's" as
+    # a string, so the row shows the reference past it was rewritten
+    "schema_name_rewritten_past_apostrophe_in_identifier": (
+        lambda request: _script_rows(
+            request,
+            """
+            CREATE SCHEMA lexs;
+            CREATE TEMP TABLE lexs.t AS SELECT 1 AS k;
+            SELECT "it's" AS label, k FROM lexs.t;
+            """,
+        ),
+        [("it's", 1)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_LEXER_REGRESSIONS))
+def test_lexer_quoting_regressions(case, request):
+    run, expected = _LEXER_REGRESSIONS[case]
+    assert run(request) == expected
+
+
+@pytest.mark.parametrize(
+    "sql, message",
+    [
+        ("SELECT 'abc", "unterminated quoted string at or near \"'abc\""),
+        ('SELECT "abc', 'unterminated quoted identifier at or near ""abc"'),
+        ("SELECT 1 /* abc", 'unterminated /* comment at or near "/* abc"'),
+        (
+            "CREATE FUNCTION f() RETURNS INT AS $$ SELECT 1; SELECT 2",
+            'unterminated dollar-quoted string at or near "$$ SELECT 1; SELECT 2"',
+        ),
+        (
+            "SELECT DATEDIFF(day, a, b FROM t",
+            'unbalanced parentheses at or near "(day, a, b FROM t"',
+        ),
+    ],
+)
+def test_malformed_sql_fails_loudly(sql, message):
+    """Bad input raises ValueError in Redshift's wording, from the
+    single-statement front-end and (for lexical errors) from the script
+    splitter — never an IndexError, and never a $$ body that swallows
+    the rest of the script."""
+    with pytest.raises(ValueError) as err:
+        _translate(sql)
+    assert str(err.value) == message
+    if "unbalanced" not in message:
+        with pytest.raises(ValueError) as err:
+            _split(sql + "; SELECT 3;")
+        assert str(err.value).startswith(message.split(" at or near ")[0])
+
+
+@pytest.mark.parametrize("value", ["abc", "2.5", "0", "-3"])
+def test_stream_state_partitions_env_rejects_junk(monkeypatch, value):
+    from sql_redshift_etl_spark.streaming.pipeline import stream_state_partitions
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", value)
+    with pytest.raises(ValueError, match=f"SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS.*'{value}'"):
+        stream_state_partitions(None, "/nonexistent")
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "3")
+    assert stream_state_partitions(None, "/nonexistent") == 3
